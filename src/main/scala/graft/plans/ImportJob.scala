@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
 import graft.operators.{Dedup, Drift, Merge}
 import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
+import scala.collection.mutable
 
 /** Multi-table staged import, executed in dependency order.
   *
@@ -292,23 +293,9 @@ object ImportJob {
     * mappings in spec order), merge `incoming` into `dest` and return
     * the resulting frames keyed by table name.
     *
-    * Concurrency (guide §2.6, round 15): each table stages on its own
-    * driver thread. The pins in this pipeline (lazy localCheckpoints,
-    * the FkFail gate, post-hook surrogate assignment) all BLOCK the
-    * calling thread through their subtree's AQE stage ladder, so a
-    * sequential loop serializes the whole job into a chain of
-    * 20–400 ms single-stage jobs (measured on q_ecom_job_strict: 57
-    * jobs, sum(job wall) == wall — zero overlap). Per-table threads
-    * let independent ladders back-fill each other's stragglers.
-    * Visibility is kept EXACTLY sequential-equivalent: a lookup of a
-    * table earlier in the dependency order awaits that table's future
-    * and sees its fully-merged state; a self-lookup sees the mid-table
-    * state (multi-mapping feeds); a later table resolves to the
-    * untouched destination — precisely what the sequential loop
-    * exposed. Awaits only ever point earlier in the total order, so
-    * the wait graph is acyclic. A failing table (FkFail, schema check,
-    * drift gate) propagates the FIRST failure in table order, like the
-    * sequential loop raised it.
+    * Tables run in dependency order on the caller's thread, so a
+    * lookup sees an earlier table's merged state, its own table's
+    * mid-table state and a later table's untouched destination.
     *
     * @param removeMissing deferred cross-mapping delete-excess
     *                      (RemoveMissingRowsAcrossAllTables,
@@ -322,45 +309,19 @@ object ImportJob {
     val tables = specs.map(_.table).distinct
     val ordered = TableOrder.order(tables, deps)
     val byTable = specs.groupBy(_.table)
-    val position: Map[String, Int] = ordered.zipWithIndex.toMap
 
     // ── stage + merge every mapping, tables in dependency order ──────
     // merged-but-not-deleted states, visible to later specs' preResolve
-    val state = scala.collection.concurrent.TrieMap[String, DataFrame]()
+    val state = mutable.Map[String, DataFrame]()
     // per table: the staged batches (post-quarantine/pre/dedup) — the
     // deferred delete and flagMissing compare against their union
-    val staged = scala.collection.concurrent.TrieMap[String, Seq[DataFrame]]()
-    val quarantines = scala.collection.concurrent.TrieMap[String, Seq[DataFrame]]()
-    val preMergeDest = scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-    val pool = java.util.concurrent.Executors.newCachedThreadPool(
-      (r: Runnable) => {
-        val t = new Thread(r, "import-job"); t.setDaemon(true); t
-      })
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val stagingDone =
-      new java.util.concurrent.ConcurrentHashMap[String, scala.concurrent.Future[Unit]]()
-    def awaitStaged(name: String): Unit =
-      Option(stagingDone.get(name)).foreach(f =>
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-
-    // sequential-equivalent visibility for table `table`'s hooks
-    def lookupFor(table: String): String => DataFrame = { name =>
-      if (name != table && position.get(name).exists(_ < position(table))) {
-        awaitStaged(name)
-        state.getOrElse(name, dest(name))
-      } else if (name == table) state.getOrElse(name, dest(name))
-      else dest(name)
-    }
-    def stagedOfFor(table: String): String => Seq[DataFrame] = { name =>
-      if (name != table && position.get(name).exists(_ < position(table)))
-        awaitStaged(name)
-      staged.getOrElse(name, Nil)
-    }
+    val staged = mutable.Map[String, Seq[DataFrame]]()
+    val quarantines = mutable.Map[String, Seq[DataFrame]]()
+    val preMergeDest = mutable.Map[String, DataFrame]()
+    val lookup: String => DataFrame = name => state.getOrElse(name, dest(name))
+    val stagedOf: String => Seq[DataFrame] = name => staged.getOrElse(name, Nil)
 
     def stageTable(table: String): Unit = {
-      val lookup = lookupFor(table)
       preMergeDest(table) = dest(table)
       byTable(table).foreach { spec =>
         val raw0 = incoming(spec.sourceName.getOrElse(table))
@@ -445,7 +406,7 @@ object ImportJob {
         // partialUpdate is set (EcomDestinationWriter.cs:3214),
         // independent of RemoveMissingAfterImport/deleteExcess
         if ((spec.deleteExcess || spec.partialUpdate.isDefined) && !removeMissing)
-          out = applyDeleteExcess(out, Seq(in), spec, stagedOfFor(table))
+          out = applyDeleteExcess(out, Seq(in), spec, stagedOf)
         state(table) = out
       }
       // pin tables the job's OTHER tables depend on: every dependent
@@ -516,38 +477,21 @@ object ImportJob {
       Seq(table -> finalOut) ++ quarantined ++ driftFrame
     }
 
-    // ── orchestrate: one future per table. Inline mode fuses the
-    // finish hooks (flagMissing/post/drift) onto the table's own
-    // future — a blocking post hook (surrogate assignment) then
-    // overlaps later tables' staging instead of serializing after it.
-    // Deferred mode must interpose the cross-table delete phase, so
-    // finish runs after every table staged.
-    val results =
-      scala.collection.concurrent.TrieMap[String, Seq[(String, DataFrame)]]()
-    try {
-      ordered.foreach { table =>
-        stagingDone.put(table, scala.concurrent.Future {
-          stageTable(table)
-          if (!removeMissing) results(table) = finishTable(table)
-        })
+    if (!removeMissing)
+      // inline: a table's finish hooks run before the next table stages
+      ordered.flatMap { table => stageTable(table); finishTable(table) }.toMap
+    else {
+      ordered.foreach(stageTable)
+      // deferred delete-excess: after EVERY table of the job staged,
+      // against the union of each table's batches, children first
+      ordered.reverse.foreach { table =>
+        byTable(table).find(s => s.deleteExcess || s.partialUpdate.isDefined)
+          .foreach { spec =>
+            state(table) = applyDeleteExcess(state(table), staged(table), spec, stagedOf)
+          }
       }
-      // first failure in table order propagates, like the sequential loop
-      ordered.foreach(awaitStaged)
-
-      if (removeMissing) {
-        // deferred delete-excess: after EVERY table of the job staged,
-        // against the union of each table's batches, children first
-        ordered.reverse.foreach { table =>
-          byTable(table).find(s => s.deleteExcess || s.partialUpdate.isDefined)
-            .foreach { spec =>
-              state(table) = applyDeleteExcess(state(table), staged(table),
-                spec, t2 => staged.getOrElse(t2, Nil))
-            }
-        }
-        ordered.foreach(table => results(table) = finishTable(table))
-      }
-      ordered.flatMap(table => results(table)).toMap
-    } finally pool.shutdown()
+      ordered.flatMap(finishTable).toMap
+    }
   }
 
   /** The FkFail arm, shared with the streaming twin

@@ -43,7 +43,10 @@ object ItemSim {
 
   /** Deterministic capped binary history: one (u, i) row per kept
     * interaction. Pinned eagerly — ≤ users·maxUserItems rows by
-    * construction (referenced by counts + both pair sides).
+    * construction (referenced by counts + both pair sides). Rows with a
+    * null user (guest checkouts) are dropped before the cap: grouped by
+    * user they would all fall into ONE history and pair items across
+    * unrelated guests.
     */
   private def cappedSets(interactions: DataFrame, userCol: String,
                          itemCol: String, strengthCol: String,
@@ -51,6 +54,7 @@ object ItemSim {
     val capW = Window.partitionBy(col(userCol))
       .orderBy(col(strengthCol).desc, col(itemCol).asc)
     interactions
+      .filter(col(userCol).isNotNull)
       .withColumn("__r", row_number().over(capW))
       .filter(col("__r") <= maxUserItems)
       .select(col(userCol).as("u"), col(itemCol).as("i"))
@@ -153,7 +157,9 @@ object ItemSim {
         .select(col(userCol), col(itemCol), col(strengthCol), lit(1L).as("__side")))
     val capW = Window.partitionBy(col("__side"), col(userCol))
       .orderBy(col(strengthCol).desc, col(itemCol).asc)
+    // null users dropped before the cap, as in cappedSets
     val sets = tagged
+      .filter(col(userCol).isNotNull)
       .withColumn("__r", row_number().over(capW))
       .filter(col("__r") <= maxUserItems)
       .select(col("__side"), col(userCol).as("u"), col(itemCol).as("i"))

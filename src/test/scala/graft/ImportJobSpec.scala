@@ -500,4 +500,55 @@ class ImportJobSpec extends SparkSuite {
     // (P3,30,en): parent P3 not imported -> survives under partialUpdate.
     assert(out === Array(("P1", 10L, "en"), ("P1", 12L, "fr"), ("P3", 30L, "en")))
   }
+
+  test("partialUpdate whose parent table is ordered AFTER the child deletes " +
+    "nothing inline: the parent has not staged yet") {
+    val destProducts = Seq(("P1", "a"), ("P3", "c")).toDF("pid", "pname")
+    val inProducts = Seq(("P1", "a2")).toDF("pid", "pname")
+    val destRels = Seq(("P1", 10L), ("P1", 11L), ("P3", 30L)).toDF("pid", "rid")
+    val inRels = Seq(("P1", 10L)).toDF("pid", "rid")
+    def run(removeMissing: Boolean) = ImportJob.run(
+      Seq(
+        TableSpec("products", keys = Seq("pid")),
+        TableSpec("rels", keys = Seq("pid", "rid"), deleteExcess = true,
+          partialUpdate = Some(ParentScope("products", Seq("pid"), Seq("pid"))))),
+      dest = Map("products" -> destProducts, "rels" -> destRels),
+      incoming = Map("products" -> inProducts, "rels" -> inRels),
+      // orders rels before products
+      deps = Map("products" -> Set("rels")),
+      removeMissing = removeMissing)("rels")
+      .orderBy("pid", "rid").as[(String, Long)].collect()
+    assert(run(removeMissing = false) === Array(("P1", 10L), ("P1", 11L), ("P3", 30L)))
+    // deferred deletes run after every table staged, products included
+    assert(run(removeMissing = true) === Array(("P1", 10L), ("P3", 30L)))
+  }
+
+  test("a failing FkFail gate stops the job: a later, independent table " +
+    "never stages and pins nothing") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val laterPre = new java.util.concurrent.atomic.AtomicInteger(0)
+    val gate = Some(FkGate(Seq("ref")))
+    val specs = Seq(
+      TableSpec("failing", keys = Seq("id"), fkGate = gate),
+      TableSpec("later", keys = Seq("id"), fkGate = gate, deleteExcess = true,
+        pre = df => { laterPre.incrementAndGet(); df }))
+    val dest = Map(
+      "failing" -> Seq((1L, Option(1L))).toDF("id", "ref"),
+      "later" -> Seq((1L, Option(1L))).toDF("id", "ref"))
+    val incoming = Map(
+      "failing" -> Seq((2L, Option.empty[Long])).toDF("id", "ref"),
+      "later" -> Seq((2L, Option(2L))).toDF("id", "ref"))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val ex = intercept[FkViolationException](
+      ImportJob.run(specs, dest, incoming, deps = Map.empty[String, Set[String]]))
+    assert(ex.table === "failing")
+    assert(laterPre.get === 0)
+    // the only new pin is the failing gate's own batch, which ex.rows reads
+    val gatePin = ex.rows.queryExecution.logical.collect {
+      case r: LogicalRDD => r.rdd.id }.toSet
+    assert(gatePin.size === 1)
+    assert(sc.getPersistentRDDs.keySet -- before -- gatePin === Set.empty)
+    assert(ex.rows.count() === 1L)
+  }
 }

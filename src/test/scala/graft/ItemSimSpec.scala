@@ -83,6 +83,33 @@ class ItemSimSpec extends SparkSuite {
     assert(a === b)
   }
 
+  test("null-user rows (guest checkouts) never pair: built and maintained " +
+    "counts == a rebuild without them") {
+    val rnd = new scala.util.Random(23)
+    val known = (for (u <- 1L to 12L; i <- 1L to 10L if rnd.nextInt(3) == 0)
+      yield (Option(u), i, 1L + rnd.nextInt(5))).toSeq
+    // distinct guests share the null user: grouped by user they would
+    // form one history pairing items across unrelated checkouts
+    val guests = Seq((None, 1L, 3L), (None, 2L, 1L), (None, 3L, 2L), (None, 2L, 4L))
+    val newGuests = Seq((None, 4L, 5L), (None, 5L, 1L))
+    val base = known ++ guests
+    // the CDC delta: user 3 gains a strong item, more guests check out
+    val user3 = Option(3L)
+    val newFull = base ++ Seq((user3, 100L, 99L)) ++ newGuests
+    val oldChanged = base.filter(r => r._1 == user3 || r._1.isEmpty)
+    val newChanged = newFull.filter(r => r._1 == user3 || r._1.isEmpty)
+    def df(rows: Seq[(Option[Long], Long, Long)]) = rows.toDF("u", "i", "s")
+    def sets(c: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)) =
+      (c._1.as[(Long, Long, Long)].collect().toSet, c._2.as[(Long, Long)].collect().toSet)
+
+    val (p0, i0) = ItemSim.counts(df(base), "u", "i", "s", 4)
+    assert(sets((p0, i0)) === sets(ItemSim.counts(df(known), "u", "i", "s", 4)))
+    val maintained = ItemSim.maintainCounts(p0, i0, df(oldChanged), df(newChanged),
+      "u", "i", "s", 4)
+    assert(sets(maintained) ===
+      sets(ItemSim.counts(df(newFull.filter(_._1.nonEmpty)), "u", "i", "s", 4)))
+  }
+
   test("randomized equality with a driver-side reference") {
     val rnd = new scala.util.Random(3)
     val rows = (for (u <- 1L to 40L; i <- 1L to 25L if rnd.nextInt(4) == 0)
