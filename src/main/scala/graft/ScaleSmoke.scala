@@ -122,12 +122,12 @@ object ScaleSmoke {
       def tree(n: Long) = spark.range(1, n)
         .selectExpr("id AS child", "id DIV 2 AS parent")
       for (n <- Seq(5000L, 5000L * mult)) {
-        time(s"closure n=$n") {
+        time(s"closure n=$n")(Pins.scope { p =>
           val cl = Hierarchy.closure(tree(n), "child", "parent")
           val c = cl.count()
-          org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(cl)
+          p.release(cl)
           c
-        }
+        })
       }
     }
 
@@ -327,8 +327,8 @@ object ScaleSmoke {
         (col("id") + nEv).as("event_id"),
         timestamp_micros(col("id") * 31000L + lit(base0)).as("ts"),
         payload.as("props"))
-      val ev = hotEv.unionByName(coldEv).repartition(64).localCheckpoint(true)
-      try {
+      Pins.scope { p =>
+        val ev = p.pin(hotEv.unionByName(coldEv).repartition(64), true)
         var nSeq = 0L
         var nPar = 0L
         time(s"debounce sequential ${mult}x (hot key = one task)") {
@@ -341,7 +341,7 @@ object ScaleSmoke {
         }
         println(s"[scale] debounce outputs equal: ${nSeq == nPar} ($nSeq)")
         assert(nSeq == nPar, s"chunked debounce diverged: $nSeq vs $nPar")
-      } finally org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(ev)
+      }
     }
     if (section == "all" || section == "asof") {
       // ONE hot key with 300k rows per side: a [currentRow,
@@ -542,11 +542,11 @@ object ScaleSmoke {
       // scan- or cumsum-shaped, so the ramp must stay ~linear in docs
       // (the sf0.1 gap vs the oracle is job-count floor, not growth)
       import graft.pipelines.Curriculum
-      def annealCount(d: org.apache.spark.sql.DataFrame): Long = {
+      def annealCount(d: org.apache.spark.sql.DataFrame): Long = Pins.scope { p =>
         val out = Curriculum.annealSchedule(d, "doc_id", "text",
           col("source") === "src0")
         val n = out.count()
-        org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(out)
+        p.release(out)
         n
       }
       time("anneal schedule 1x")(annealCount(docs1))
@@ -1398,7 +1398,7 @@ object ScaleSmoke {
       // holds 2K+2 longs at every multiple).
       import graft.pipelines.FellegiSunter
       val cust1 = Tables.load(spark, base, "customer")
-      val exps = Seq(1, math.max(mult / 10, 2), mult).distinct.map { m =>
+      val exps = Seq(1, math.max(mult / 10, 2), mult).distinct.map { m => Pins.scope { p =>
         val cm =
           if (m == 1) cust1
           else (0 until m).map(i => cust1
@@ -1421,7 +1421,7 @@ object ScaleSmoke {
         val decoys = cust.select(col("id").as("id_a"))
           .join(cust.select(col("id").as("id_b")),
             col("id_b") === col("id_a") + 1)
-        val pairs = matchPairs.unionByName(decoys)
+        val pairs = p.pin(matchPairs.unionByName(decoys)
           .join(ents.select(col("id").as("id_a"), col("nm").as("nm_a"),
             col("bal").as("bal_a"), col("seg").as("seg_a"),
             col("nat").as("nat_a")), Seq("id_a"))
@@ -1432,16 +1432,14 @@ object ScaleSmoke {
             (col("nm_a") === col("nm_b")).as("a_name"),
             (col("bal_a") === col("bal_b")).as("a_bal"),
             (col("nat_a") === col("nat_b")).as("a_nat"),
-            (col("seg_a") === col("seg_b")).as("a_seg"))
-          .localCheckpoint(true)
+            (col("seg_a") === col("seg_b")).as("a_seg")), true)
         val np = pairs.count()
         println(s"[scale] linkage ${m}x: $np pairs")
         val t = time(s"fs link ${m}x")(
           FellegiSunter.link(pairs,
             Seq("a_name", "a_bal", "a_nat", "a_seg"), iters = 5).count())
-        org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(pairs)
         (m, np, t)
-      }
+      } }
       val (m1, n1, t1) = exps.head
       exps.tail.foreach { case (m, np, t) =>
         val ln = math.log(np.toDouble / n1)
@@ -1466,7 +1464,6 @@ object ScaleSmoke {
       // budget, reported per multiple, shows how far greedy routing
       // degrades as the same 4 hash-order entries serve an m× corpus.
       import graft.similarity.{GraphSearch, NnDescent}
-      val free = org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint _
       val emb1 = Tables.load(spark, base, "embeddings")
         .filter(col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
@@ -1486,7 +1483,7 @@ object ScaleSmoke {
           transform(col("__qe"), x =>
             (x.cast("double") * (lit(1.0) + col("id").cast("double") * lit(1e-5)))
               .cast("float")).as("embedding"))
-      val exps = Seq(1, math.max(mult / 10, 2), mult).distinct.map { m =>
+      val exps = Seq(1, math.max(mult / 10, 2), mult).distinct.map { m => Pins.scope { p =>
         val em =
           if (m == 1) emb1
           else (0 until m).map(i => emb1
@@ -1499,8 +1496,8 @@ object ScaleSmoke {
         val n = c.count()
         var graph: DataFrame = null
         val tb = time(s"gnns build ${m}x") {
-          graph = NnDescent.knnGraph(c, "vec_id", "embedding",
-            k = 5, rounds = 3).localCheckpoint(true)
+          graph = p.pin(NnDescent.knnGraph(c, "vec_id", "embedding",
+            k = 5, rounds = 3), true)
           graph.count()
         }
         var res: DataFrame = null
@@ -1513,9 +1510,9 @@ object ScaleSmoke {
           .agg(max(col("cos_sim")).as("c1"))
           .agg(avg(col("c1"))).head().getDouble(0)
         println(f"[scale] gnns ${m}x: $n vectors, avg top-1 cos $avgTop1%.4f")
-        free(res); free(graph)
+        p.release(res)
         (m, n, tb, ts)
-      }
+      } }
       val (m1, n1, tb1, ts1) = exps.head
       exps.tail.foreach { case (m, n, tb, ts) =>
         val ln = math.log(n.toDouble / n1)

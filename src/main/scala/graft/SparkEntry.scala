@@ -2767,34 +2767,34 @@ object SparkEntry {
       // (count, median, deviations, MAD) and each reference re-expanded
       // the whole daily-agg + decomposition DAG (14 scans in the r14
       // before-plan). Day-level rows are bounded by the CALENDAR at any
-      // corpus size, so the pin is 100 TB-safe; the eager tail below
-      // frees it (the RunningTotals discipline).
-      val resid = Stats.decomposeAdditive(daily, "rn", "dow", "rev_c", window = 7)
-        .filter(col("resid").isNotNull)
-        .select(col("d"), col("rev_c"), col("resid"))
-        .localCheckpoint(true)
-      val n = resid.agg(count(lit(1)).as("n"))
-      val med = resid.crossJoin(broadcast(n))
-        .withColumn("__rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("resid"), col("d"))))
-        .filter(col("__rk") === expr("(n + 1) DIV 2"))
-        .select(col("resid").as("med"))
-      val withDev = resid.crossJoin(broadcast(med))
-        .withColumn("dev", abs(col("resid") - col("med")))
-      val mad = withDev.crossJoin(broadcast(n))
-        .withColumn("__rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("dev"), col("d"))))
-        .filter(col("__rk") === expr("(n + 1) DIV 2"))
-        .select(col("dev").as("mad"))
-      val anomalies = withDev.crossJoin(broadcast(mad))
-        .filter(col("dev") > lit(3L) * col("mad"))
-        .select(date_format(col("d"), "yyyy-MM-dd").as("d"), col("rev_c"),
-          col("resid"), col("dev"), col("mad"))
-        .orderBy(col("d"))
-      try anomalies.localCheckpoint(true)
-      finally org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(resid)
+      // corpus size, so the pin is 100 TB-safe; the scope frees it once
+      // the eager tail is pinned (the RunningTotals discipline).
+      Pins.scope { p =>
+        val resid = p.pin(Stats.decomposeAdditive(daily, "rn", "dow", "rev_c", window = 7)
+          .filter(col("resid").isNotNull)
+          .select(col("d"), col("rev_c"), col("resid")), true)
+        val n = resid.agg(count(lit(1)).as("n"))
+        val med = resid.crossJoin(broadcast(n))
+          .withColumn("__rk", row_number().over(
+            org.apache.spark.sql.expressions.Window
+              .orderBy(col("resid"), col("d"))))
+          .filter(col("__rk") === expr("(n + 1) DIV 2"))
+          .select(col("resid").as("med"))
+        val withDev = resid.crossJoin(broadcast(med))
+          .withColumn("dev", abs(col("resid") - col("med")))
+        val mad = withDev.crossJoin(broadcast(n))
+          .withColumn("__rk", row_number().over(
+            org.apache.spark.sql.expressions.Window
+              .orderBy(col("dev"), col("d"))))
+          .filter(col("__rk") === expr("(n + 1) DIV 2"))
+          .select(col("dev").as("mad"))
+        val anomalies = withDev.crossJoin(broadcast(mad))
+          .filter(col("dev") > lit(3L) * col("mad"))
+          .select(date_format(col("d"), "yyyy-MM-dd").as("d"), col("rev_c"),
+            col("resid"), col("dev"), col("mad"))
+          .orderBy(col("d"))
+        anomalies.localCheckpoint(true)
+      }
     }),
 
     "q_feature_matrix" -> ((s, dir) => {

@@ -47,15 +47,16 @@ object Clusters {
     val p = pairs.select(col("id_a").cast("long"), col("id_b").cast("long")).persist()
     val nPairs = p.count()
     val isLocal = nPairs <= maxLocalEdges
-    val mapping = if (isLocal) localUnionFind(p) else propagate(p, maxIters)
-    val out = ids.join(broadcastIfLocal(mapping, isLocal), Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("__canon"), col("id")).as("canonical_id"))
-      .persist()
-    out.count() // materialize so upstream caches can be released NOW
-    p.unpersist()
-    if (!isLocal) // propagate returns a checkpointed frame — free its blocks
-      org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(mapping)
-    out
+    // the scope frees propagate's checkpointed mapping once `out` is cached
+    graft.Pins.scope { pins =>
+      val mapping = if (isLocal) localUnionFind(p) else propagate(pins, p, maxIters)
+      val out = ids.join(broadcastIfLocal(mapping, isLocal), Seq("id"), "left_outer")
+        .select(col("id"), coalesce(col("__canon"), col("id")).as("canonical_id"))
+        .persist()
+      out.count() // materialize so upstream caches can be released NOW
+      p.unpersist()
+      out
+    }
   }
 
   private def broadcastIfLocal(mapping: DataFrame, isLocal: Boolean): DataFrame =
@@ -100,7 +101,7 @@ object Clusters {
     * (a partially propagated mapping would silently split real clusters
     * into several canonicals and ship near-duplicates downstream).
     */
-  private def propagate(pairs: DataFrame, maxIters: Int): DataFrame = {
+  private def propagate(p: graft.Pins, pairs: DataFrame, maxIters: Int): DataFrame = {
     // both directions from ONE pass over pairs (a union of two selects
     // would compute the pair lineage twice at persist time)
     val edges = pairs.select(explode(expr(
@@ -112,8 +113,8 @@ object Clusters {
     // otherwise nest every previous round's (lineage grows per
     // iteration and Catalyst re-analysis starts to dominate — the same
     // fix as Hierarchy.closure's doubling loop)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint(true)
+    var labels = p.pin(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")), true)
     var iter = 0
     // labels only ever decrease, so sum(label) is strictly monotone until
     // the fixpoint — one cheap aggregate per round
@@ -129,30 +130,27 @@ object Clusters {
           least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
       // pointer jump: label := min(label, label's label) — one
       // label-table self-join per round buys O(log diameter) convergence
-      val next = stepped.join(
+      val next = p.pin(stepped.join(
           stepped.select(col("id").as("label"), col("label").as("__ll")),
           Seq("label"), "left_outer")
         .select(col("id"),
-          least(col("label"), coalesce(col("__ll"), col("label"))).as("label"))
-        .localCheckpoint(true)
+          least(col("label"), coalesce(col("__ll"), col("label"))).as("label")), true)
       val s = next.agg(sum(col("label"))).head.getLong(0)
       converged = prevSum.contains(s)
       prevSum = Some(s)
       // free the superseded round's checkpoint blocks NOW — Dataset
       // .unpersist doesn't touch them, and waiting for driver GC lets
       // one labels snapshot per round pile up in executor storage
-      org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(labels)
+      p.release(labels)
       labels = next
       iter += 1
     }
     edges.unpersist()
-    if (!converged) {
-      org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(labels)
+    if (!converged)
       throw new IllegalStateException(
         s"Clusters.propagate did not converge in $maxIters rounds — the " +
           "component diameter exceeds 2^rounds even with pointer jumping; " +
           "raise maxIters (a partial mapping would silently split clusters)")
-    }
     labels.withColumnRenamed("label", "__canon")
   }
 

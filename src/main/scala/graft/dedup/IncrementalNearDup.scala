@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.util.sketch.BloomFilter
+import graft.Pins
 import graft.functions.MinHash
 
 /** Streaming twin of [[NearDup.minhashPairs]]: LSH index MAINTENANCE.
@@ -88,7 +89,17 @@ object IncrementalNearDup {
                    indexDir: String, numHashes: Int = 64, bands: Int = 16,
                    shingleLen: Int = 3, threshold: Double = 0.8,
                    batchTag: Option[Long] = None,
-                   knownBloom: Option[Array[Byte]] = None): DataFrame = {
+                   knownBloom: Option[Array[Byte]] = None): DataFrame =
+    Pins.scope(batchPairs(_, batch, idCol, textCol, indexDir, numHashes,
+      bands, shingleLen, threshold, batchTag, knownBloom))
+
+  /** [[processBatch]] with the returned pairs pinned through `out`, so
+    * the streaming loop's scope frees them once they are written; the
+    * batch sketches are freed when this call returns.
+    */
+  private def batchPairs(out: Pins, batch: DataFrame, idCol: String, textCol: String,
+      indexDir: String, numHashes: Int, bands: Int, shingleLen: Int, threshold: Double,
+      batchTag: Option[Long], knownBloom: Option[Array[Byte]]): DataFrame = Pins.scope { p =>
     require(numHashes % bands == 0, "bands must divide numHashes")
     val spark = batch.sparkSession
     val rows = numHashes / bands
@@ -124,76 +135,71 @@ object IncrementalNearDup {
     // would be invalidated and silently recomputed against the
     // just-appended index (Spark recaches by path on write), turning
     // `fresh` empty. Cutting lineage makes the append unable to reach
-    // back into the computation.
-    val sigsNew = fresh.select(col("id"),
+    // back into the computation. The scope frees the blocks on return
+    // (`verified` has its own pin and no lineage into sigsNew), so a
+    // long-running stream does not pile one snapshot per batch into
+    // executor storage.
+    val sigsNew = p.pin(fresh.select(col("id"),
       MinHash.minhashSignature(col("text"), numHashes, shingleLen).as("sig"),
-      NearDup.shingles(col("text"), shingleLen).as("sset")).localCheckpoint(true)
-    try {
-      val bandsNew = NearDup.bandBuckets(sigsNew, bands, rows).persist()
+      NearDup.shingles(col("text"), shingleLen).as("sset")), true)
+    val bandsNew = NearDup.bandBuckets(sigsNew, bands, rows).persist()
 
-      val newNew = NearDup.bucketPairs(bandsNew, Seq("band", "bucket"))
-      val cand = (if (indexExists) {
-        val postings = readIndex("bands", Seq("id", "band", "bucket"))
-        // broadcast the batch's bucket keys; the index is pruned to
-        // touched buckets before any pair enumeration
-        val touched = postings.join(
-          broadcast(bandsNew.select("band", "bucket").distinct()),
-          Seq("band", "bucket"), "left_semi")
-        val newOld = bandsNew.select(col("band"), col("bucket"), col("id").as("id_new"))
-          .join(touched.select(col("band"), col("bucket"), col("id").as("id_old")),
-            Seq("band", "bucket"))
-          .filter(col("id_new") =!= col("id_old"))
-          .select(least(col("id_new"), col("id_old")).as("id_a"),
-            greatest(col("id_new"), col("id_old")).as("id_b"))
-        newNew.unionByName(newOld)
-      } else newNew).dropDuplicates("id_a", "id_b").persist()
+    val newNew = NearDup.bucketPairs(bandsNew, Seq("band", "bucket"))
+    val cand = (if (indexExists) {
+      val postings = readIndex("bands", Seq("id", "band", "bucket"))
+      // broadcast the batch's bucket keys; the index is pruned to
+      // touched buckets before any pair enumeration
+      val touched = postings.join(
+        broadcast(bandsNew.select("band", "bucket").distinct()),
+        Seq("band", "bucket"), "left_semi")
+      val newOld = bandsNew.select(col("band"), col("bucket"), col("id").as("id_new"))
+        .join(touched.select(col("band"), col("bucket"), col("id").as("id_old")),
+          Seq("band", "bucket"))
+        .filter(col("id_new") =!= col("id_old"))
+        .select(least(col("id_new"), col("id_old")).as("id_a"),
+          greatest(col("id_new"), col("id_old")).as("id_b"))
+      newNew.unionByName(newOld)
+    } else newNew).dropDuplicates("id_a", "id_b").persist()
 
-      // verification features: batch sketches + (for new×old pairs) the
-      // index sketches of candidate ids only — semi-join prunes the read
-      val candIds = cand.select(col("id_a").as("id"))
-        .unionByName(cand.select(col("id_b").as("id"))).distinct()
-      val allSigs = (if (indexExists)
-        readIndex("sigs", Seq("id", "sig", "sset")).unionByName(sigsNew)
-      else sigsNew.toDF())
-        .join(candIds, Seq("id"), "left_semi")
+    // verification features: batch sketches + (for new×old pairs) the
+    // index sketches of candidate ids only — semi-join prunes the read
+    val candIds = cand.select(col("id_a").as("id"))
+      .unionByName(cand.select(col("id_b").as("id"))).distinct()
+    val allSigs = (if (indexExists)
+      readIndex("sigs", Seq("id", "sig", "sset")).unionByName(sigsNew)
+    else sigsNew.toDF())
+      .join(candIds, Seq("id"), "left_semi")
 
-      val featA = allSigs.select(col("id").as("id_a"),
-        col("sig").as("sig_a"), col("sset").as("set_a"))
-      val featB = allSigs.select(col("id").as("id_b"),
-        col("sig").as("sig_b"), col("sset").as("set_b"))
-      val verified = cand.join(featA, Seq("id_a")).join(featB, Seq("id_b"))
-        .withColumn("est_jaccard", round(
-          size(filter(zip_with(col("sig_a"), col("sig_b"), (a, b) => a === b),
-            x => x)).cast("double") / numHashes, 4))
-        .withColumn("jaccard", round(
-          size(array_intersect(col("set_a"), col("set_b"))).cast("double") /
-            greatest(size(array_union(col("set_a"), col("set_b"))), lit(1)).cast("double"), 4))
-        .filter(col("jaccard") >= threshold)
-        .select(col("id_a"), col("id_b"), col("est_jaccard"), col("jaccard"))
-        // materialized AND lineage-cut: the appends below touch the index
-        // files this plan read, so a mere persist would be refreshed-by-path
-        // into recomputing against the grown index (empty result)
-        .localCheckpoint(true)
+    val featA = allSigs.select(col("id").as("id_a"),
+      col("sig").as("sig_a"), col("sset").as("set_a"))
+    val featB = allSigs.select(col("id").as("id_b"),
+      col("sig").as("sig_b"), col("sset").as("set_b"))
+    // materialized AND lineage-cut: the appends below touch the index
+    // files this plan read, so a mere persist would be refreshed-by-path
+    // into recomputing against the grown index (empty result)
+    val verified = out.pin(cand.join(featA, Seq("id_a")).join(featB, Seq("id_b"))
+      .withColumn("est_jaccard", round(
+        size(filter(zip_with(col("sig_a"), col("sig_b"), (a, b) => a === b),
+          x => x)).cast("double") / numHashes, 4))
+      .withColumn("jaccard", round(
+        size(array_intersect(col("set_a"), col("set_b"))).cast("double") /
+          greatest(size(array_union(col("set_a"), col("set_b"))), lit(1)).cast("double"), 4))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("est_jaccard"), col("jaccard")), true)
 
-      // index writes AFTER the pair computation read the index; with a
-      // batchTag they overwrite this tag's own partitions (idempotent
-      // replay), without one they append (one-shot batch contract)
-      batchTag match {
-        case Some(tag) =>
-          sigsNew.write.mode("overwrite").parquet(s"$indexDir/sigs/batch=$tag")
-          bandsNew.write.mode("overwrite").parquet(s"$indexDir/bands/batch=$tag")
-        case None =>
-          sigsNew.write.mode("append").parquet(s"$indexDir/sigs")
-          bandsNew.write.mode("append").parquet(s"$indexDir/bands")
-      }
-      bandsNew.unpersist(); cand.unpersist()
-      verified
-    } finally
-      // free the batch-sketch checkpoint blocks NOW — Dataset.unpersist
-      // does not touch them and a long-running stream would pile one
-      // snapshot per batch into executor storage (`verified` has its own
-      // checkpoint and no lineage into sigsNew)
-      org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(sigsNew)
+    // index writes AFTER the pair computation read the index; with a
+    // batchTag they overwrite this tag's own partitions (idempotent
+    // replay), without one they append (one-shot batch contract)
+    batchTag match {
+      case Some(tag) =>
+        sigsNew.write.mode("overwrite").parquet(s"$indexDir/sigs/batch=$tag")
+        bandsNew.write.mode("overwrite").parquet(s"$indexDir/bands/batch=$tag")
+      case None =>
+        sigsNew.write.mode("append").parquet(s"$indexDir/sigs")
+        bandsNew.write.mode("append").parquet(s"$indexDir/bands")
+    }
+    bandsNew.unpersist(); cand.unpersist()
+    verified
   }
 
   /** Compact the append-only index: every micro-batch appends small
@@ -217,16 +223,14 @@ object IncrementalNearDup {
       fs.delete(live, true)
       fs.rename(new org.apache.hadoop.fs.Path(tmp), live)
     }
-    swapIn("sigs") { tmp =>
-      spark.read.parquet(s"$indexDir/sigs")
-        .select("id", "sig", "sset").localCheckpoint(true)
+    swapIn("sigs") { tmp => Pins.scope { p =>
+      p.pin(spark.read.parquet(s"$indexDir/sigs").select("id", "sig", "sset"), true)
         .repartition(targetFiles).write.parquet(tmp)
-    }
-    swapIn("bands") { tmp =>
-      spark.read.parquet(s"$indexDir/bands")
-        .select("id", "band", "bucket").localCheckpoint(true)
+    } }
+    swapIn("bands") { tmp => Pins.scope { p =>
+      p.pin(spark.read.parquet(s"$indexDir/bands").select("id", "band", "bucket"), true)
         .repartition(targetFiles, col("band"), col("bucket")).write.parquet(tmp)
-    }
+    } }
   }
 
   /** Continuous LSH maintenance: each micro-batch's verified pairs land
@@ -273,15 +277,15 @@ object IncrementalNearDup {
           // invariant (its ids are in the index) and do nothing else
           mergeIds(batch.select(col(idCol).as("id")))
         } else {
-          val pairs = processBatch(batch, idCol, textCol, indexDir,
-            numHashes, bands, shingleLen, threshold,
-            batchTag = Some(batchId), knownBloom = bloomBytes)
-          // bloom ⊇ index invariant: merge BEFORE the commit-marker
-          // write (a crash in between leaves phantom entries — harmless
-          // extra exact checks, never wrong results)
-          mergeIds(batch.select(col(idCol).as("id")))
-          pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-          org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(pairs)
+          Pins.scope { p =>
+            val pairs = batchPairs(p, batch, idCol, textCol, indexDir,
+              numHashes, bands, shingleLen, threshold, Some(batchId), bloomBytes)
+            // bloom ⊇ index invariant: merge BEFORE the commit-marker
+            // write (a crash in between leaves phantom entries — harmless
+            // extra exact checks, never wrong results)
+            mergeIds(batch.select(col(idCol).as("id")))
+            pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
+          }
         }
         ()
       }

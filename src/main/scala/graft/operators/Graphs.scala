@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Pins
 
 /** Distributed triangle counting over an undirected simple graph —
   * the local-clustering / community-density primitive (co-purchase
@@ -52,46 +53,49 @@ object Graphs {
   def kCore(edges: DataFrame, k: Int, maxIters: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxIters >= 1)
-    var cur = edges.select(col("u"), col("v")).localCheckpoint(true)
-    var curCount = cur.count()
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIters) {
-      val deg = cur.select(col("u").as("node"))
+    // the result reads the last generation lazily, so the scope hands
+    // that one to the caller and frees the rest, on a throw too
+    Pins.scope { p =>
+      var cur = p.pin(edges.select(col("u"), col("v")), true)
+      var curCount = cur.count()
+      var iter = 0
+      var done = false
+      while (!done && iter < maxIters) {
+        val deg = cur.select(col("u").as("node"))
+          .unionAll(cur.select(col("v").as("node")))
+          .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+        // LAZY checkpoints: the keep set and the next generation cut
+        // lineage but materialize inside the ONE count() job below —
+        // one scheduled action per peel round, not three (measured on
+        // the sf0.1 co-purchase peel: 4.4 s -> 3.5 s same-session)
+        val keep = p.pin(deg.filter(col("deg") >= k).select(col("node")), false)
+        val next = p.pin(cur
+          .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
+          .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
+          .select(col("u"), col("v")), false)
+        // fixpoint when no edge peeled this round (edge count is the
+        // cheap monotone invariant — it strictly decreases until done);
+        // the count doubles as the lazy-checkpoint materialization
+        val nextCount = next.count()
+        done = nextCount == curCount
+        // free the superseded generation (the LPA/Clusters discipline —
+        // a 50-round peel would otherwise hold 50 edge-list-sized
+        // checkpoint generations until session end)
+        p.release(cur)
+        p.release(keep)
+        cur = next
+        curCount = nextCount
+        iter += 1
+      }
+      if (!done)
+        throw new IllegalStateException(
+          s"Graphs.kCore did not reach a fixpoint in $maxIters rounds — " +
+            "adversarially deep peel (e.g. a long chain); raise maxIters " +
+            "(a partial peel would overstate the core)")
+      cur.select(col("u").as("node"))
         .unionAll(cur.select(col("v").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      // LAZY checkpoints: the keep set and the next generation cut
-      // lineage but materialize inside the ONE count() job below —
-      // one scheduled action per peel round, not three (measured on
-      // the sf0.1 co-purchase peel: 4.4 s -> 3.5 s same-session)
-      val keep = deg.filter(col("deg") >= k).select(col("node"))
-        .localCheckpoint(false)
-      val next = cur
-        .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-        .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-        .select(col("u"), col("v")).localCheckpoint(false)
-      // fixpoint when no edge peeled this round (edge count is the
-      // cheap monotone invariant — it strictly decreases until done);
-      // the count doubles as the lazy-checkpoint materialization
-      val nextCount = next.count()
-      done = nextCount == curCount
-      // free the superseded generation (the LPA/Clusters discipline —
-      // a 50-round peel would otherwise hold 50 edge-list-sized
-      // checkpoint generations until session end)
-      org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(cur)
-      org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(keep)
-      cur = next
-      curCount = nextCount
-      iter += 1
+        .groupBy(col("node")).agg(count(lit(1)).as("core_degree"))
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"Graphs.kCore did not reach a fixpoint in $maxIters rounds — " +
-          "adversarially deep peel (e.g. a long chain); raise maxIters " +
-          "(a partial peel would overstate the core)")
-    cur.select(col("u").as("node"))
-      .unionAll(cur.select(col("v").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("core_degree"))
   }
 
   /** Community detection by synchronous label propagation (Raghavan,
@@ -126,35 +130,35 @@ object Graphs {
     // re-evaluate the caller's whole upstream edge build — measured as
     // the dominant cost of the co-purchase queries, where the derived
     // graph is 3-4 orders of magnitude smaller than its build
-    val e0 = edges.localCheckpoint(true)
-    val bidir = e0.select(col("u").as("a"), col("v").as("b"))
-      .unionAll(e0.select(col("v").as("a"), col("u").as("b")))
-    var labels = e0.select(col("u").as("node"))
-      .unionAll(e0.select(col("v").as("node"))).distinct()
-      .withColumn("community", col("node")).localCheckpoint(true)
-    var lastCkpt = labels
-    for (i <- 1 to iters) {
-      val counts = bidir
-        .join(labels.withColumnRenamed("node", "b"), Seq("b"))
-        .groupBy(col("a").as("node"), col("community"))
-        .agg(count(lit(1)).as("__c"))
-      // top-1 label as a min-struct AGGREGATE, not a row_number window:
-      // (count desc, label asc) ≡ min of (−count, label), and the agg
-      // partial-combines map-side where the window must shuffle AND
-      // sort every (node, label) row per round
-      val next = counts
-        .groupBy(col("node"))
-        .agg(min(struct((-col("__c")).as("nc"), col("community").as("community")))
-          .as("__best"))
-        .select(col("node"), col("__best.community").as("community"))
-      labels = if (i < iters && i % checkpointInterval == 0) {
-        val cut = next.localCheckpoint(true)
-        org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(lastCkpt)
-        lastCkpt = cut
-        cut
-      } else next
+    Pins.scope { p =>
+      val e0 = p.pin(edges, true)
+      val bidir = e0.select(col("u").as("a"), col("v").as("b"))
+        .unionAll(e0.select(col("v").as("a"), col("u").as("b")))
+      var labels = p.pin(e0.select(col("u").as("node"))
+        .unionAll(e0.select(col("v").as("node"))).distinct()
+        .withColumn("community", col("node")), true)
+      for (i <- 1 to iters) {
+        val counts = bidir
+          .join(labels.withColumnRenamed("node", "b"), Seq("b"))
+          .groupBy(col("a").as("node"), col("community"))
+          .agg(count(lit(1)).as("__c"))
+        // top-1 label as a min-struct AGGREGATE, not a row_number window:
+        // (count desc, label asc) ≡ min of (−count, label), and the agg
+        // partial-combines map-side where the window must shuffle AND
+        // sort every (node, label) row per round
+        val next = counts
+          .groupBy(col("node"))
+          .agg(min(struct((-col("__c")).as("nc"), col("community").as("community")))
+            .as("__best"))
+          .select(col("node"), col("__best.community").as("community"))
+        labels = if (i < iters && i % checkpointInterval == 0) {
+          val cut = p.pin(next, true)
+          p.release(labels) // the previous cut
+          cut
+        } else next
+      }
+      labels
     }
-    labels
   }
 
   /** Per-node triangle participation counts: one row per node that
@@ -316,93 +320,89 @@ object Graphs {
   def kTruss(edges: DataFrame, k: Int, maxIters: Int = 20): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     require(maxIters >= 1)
-    val bridge = org.apache.spark.sql.graftbridge.bridge
-    val e0 = edges.select(col("u"), col("v")).localCheckpoint(true)
-    var curCount = e0.count()
-    // ── round 1: ONE full O(m^1.5) closure pass materializes the
-    // TRIANGLE LIST — each triangle once, stored as its three CANONICAL
-    // EDGES in six primitive columns (no arrays, no per-triangle sort;
-    // fully codegen). Incremental peel (round 15): rounds 2+ used to
-    // recompute closuresOfPinned on the survivor set from scratch —
-    // degree agg, two orientation joins, adjacency collect, per-edge
-    // intersection, O(m·√m) EVERY round. Peeling only ever REMOVES
-    // edges, so the survivor graph's triangles are exactly the kept
-    // triangles minus those touching a removed edge: three anti-joins
-    // against the (small) removed-edge set + one 3-edge explode-sum
-    // replace the whole closure pass per round (guide §1.2: fix the
-    // distributed algorithm; §2.3: shuffle T 6-column rows instead of
-    // re-deriving them). The pinned list is O(T) — the same order the
-    // per-round recompute materialized transiently anyway.
-    var tris = closuresOfPinned(e0)
-      .select(col("lo"), col("hi"), explode(col("ws")).as("w"))
-      .select(
-        least(col("lo"), col("hi")).as("e1u"),
-        greatest(col("lo"), col("hi")).as("e1v"),
-        least(col("lo"), col("w")).as("e2u"),
-        greatest(col("lo"), col("w")).as("e2v"),
-        least(col("hi"), col("w")).as("e3u"),
-        greatest(col("hi"), col("w")).as("e3v"))
-      .localCheckpoint(false)
-    // per-edge support = how many listed triangles carry the edge in
-    // any of the three slots. Triangle-free edges never appear — they
-    // peel with the under-supported ones (support 0 < k−2 for k ≥ 3).
-    def supportOf(t: DataFrame): DataFrame =
-      t.select(explode(array(
-          struct(col("e1u").as("u"), col("e1v").as("v")),
-          struct(col("e2u").as("u"), col("e2v").as("v")),
-          struct(col("e3u").as("u"), col("e3v").as("v")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-        .groupBy(col("u"), col("v")).agg(count(lit(1)).as("support"))
-    var sup = supportOf(tris).localCheckpoint(false)
-    // the one action per round: materializes the chained lazy pins and
-    // reads the survivor count (the monotone convergence invariant)
-    var nextCount = sup.filter(col("support") >= k - 2).count()
-    bridge.freeLocalCheckpoint(e0) // the triangle list supersedes it
-    var iter = 1
-    var done = nextCount == curCount
-    while (!done && iter < maxIters) {
-      curCount = nextCount
-      // this round's peel set: under-supported edges of the current
-      // graph (zero-support edges are in NO kept triangle, so they
-      // vanish from sup without needing triangle removal)
-      val removed = sup.filter(col("support") < k - 2)
-        .select(col("u"), col("v"))
-      // a triangle dies iff ANY of its three edges peeled — three
-      // anti-joins against the removed set (small per round; AQE
-      // broadcasts it), preserving each survivor exactly once
-      val trisNext = tris
-        .join(removed.withColumnRenamed("u", "e1u")
-          .withColumnRenamed("v", "e1v"), Seq("e1u", "e1v"), "left_anti")
-        .join(removed.withColumnRenamed("u", "e2u")
-          .withColumnRenamed("v", "e2v"), Seq("e2u", "e2v"), "left_anti")
-        .join(removed.withColumnRenamed("u", "e3u")
-          .withColumnRenamed("v", "e3v"), Seq("e3u", "e3v"), "left_anti")
-        .localCheckpoint(false)
-      val supNext = supportOf(trisNext).localCheckpoint(false)
-      nextCount = supNext.filter(col("support") >= k - 2).count()
-      done = nextCount == curCount
-      bridge.freeLocalCheckpoint(tris)
-      bridge.freeLocalCheckpoint(sup)
-      tris = trisNext
-      sup = supNext
-      iter += 1
+    Pins.scope { p =>
+      val e0 = p.pin(edges.select(col("u"), col("v")), true)
+      var curCount = e0.count()
+      // ── round 1: ONE full O(m^1.5) closure pass materializes the
+      // TRIANGLE LIST — each triangle once, stored as its three CANONICAL
+      // EDGES in six primitive columns (no arrays, no per-triangle sort;
+      // fully codegen). Incremental peel (round 15): rounds 2+ used to
+      // recompute closuresOfPinned on the survivor set from scratch —
+      // degree agg, two orientation joins, adjacency collect, per-edge
+      // intersection, O(m·√m) EVERY round. Peeling only ever REMOVES
+      // edges, so the survivor graph's triangles are exactly the kept
+      // triangles minus those touching a removed edge: three anti-joins
+      // against the (small) removed-edge set + one 3-edge explode-sum
+      // replace the whole closure pass per round (guide §1.2: fix the
+      // distributed algorithm; §2.3: shuffle T 6-column rows instead of
+      // re-deriving them). The pinned list is O(T) — the same order the
+      // per-round recompute materialized transiently anyway.
+      var tris = p.pin(closuresOfPinned(e0)
+        .select(col("lo"), col("hi"), explode(col("ws")).as("w"))
+        .select(
+          least(col("lo"), col("hi")).as("e1u"),
+          greatest(col("lo"), col("hi")).as("e1v"),
+          least(col("lo"), col("w")).as("e2u"),
+          greatest(col("lo"), col("w")).as("e2v"),
+          least(col("hi"), col("w")).as("e3u"),
+          greatest(col("hi"), col("w")).as("e3v")), false)
+      // per-edge support = how many listed triangles carry the edge in
+      // any of the three slots. Triangle-free edges never appear — they
+      // peel with the under-supported ones (support 0 < k−2 for k ≥ 3).
+      def supportOf(t: DataFrame): DataFrame =
+        t.select(explode(array(
+            struct(col("e1u").as("u"), col("e1v").as("v")),
+            struct(col("e2u").as("u"), col("e2v").as("v")),
+            struct(col("e3u").as("u"), col("e3v").as("v")))).as("e"))
+          .select(col("e.u").as("u"), col("e.v").as("v"))
+          .groupBy(col("u"), col("v")).agg(count(lit(1)).as("support"))
+      var sup = p.pin(supportOf(tris), false)
+      // the one action per round: materializes the chained lazy pins and
+      // reads the survivor count (the monotone convergence invariant)
+      var nextCount = sup.filter(col("support") >= k - 2).count()
+      p.release(e0) // the triangle list supersedes it
+      var iter = 1
+      var done = nextCount == curCount
+      while (!done && iter < maxIters) {
+        curCount = nextCount
+        // this round's peel set: under-supported edges of the current
+        // graph (zero-support edges are in NO kept triangle, so they
+        // vanish from sup without needing triangle removal)
+        val removed = sup.filter(col("support") < k - 2)
+          .select(col("u"), col("v"))
+        // a triangle dies iff ANY of its three edges peeled — three
+        // anti-joins against the removed set (small per round; AQE
+        // broadcasts it), preserving each survivor exactly once
+        val trisNext = p.pin(tris
+          .join(removed.withColumnRenamed("u", "e1u")
+            .withColumnRenamed("v", "e1v"), Seq("e1u", "e1v"), "left_anti")
+          .join(removed.withColumnRenamed("u", "e2u")
+            .withColumnRenamed("v", "e2v"), Seq("e2u", "e2v"), "left_anti")
+          .join(removed.withColumnRenamed("u", "e3u")
+            .withColumnRenamed("v", "e3v"), Seq("e3u", "e3v"), "left_anti"), false)
+        val supNext = p.pin(supportOf(trisNext), false)
+        nextCount = supNext.filter(col("support") >= k - 2).count()
+        done = nextCount == curCount
+        p.release(tris)
+        p.release(sup)
+        tris = trisNext
+        sup = supNext
+        iter += 1
+      }
+      if (!done)
+        throw new IllegalStateException(
+          s"Graphs.kTruss did not reach a fixpoint in $maxIters rounds — " +
+            "adversarially deep edge peel; raise maxIters (a partial peel " +
+            "would overstate the truss)")
+      // at the fixpoint the support table was computed on exactly the
+      // surviving edge set, so the filter IS the truss with its
+      // within-truss supports. Eagerly checkpoint the result, so the
+      // scope frees the loop pins (the GraphSearch discipline): library
+      // callers outside Bench would otherwise leak pinned block sets per call.
+      sup.filter(col("support") >= k - 2)
+        .select(col("u"), col("v"), col("support"))
+        .localCheckpoint(true)
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"Graphs.kTruss did not reach a fixpoint in $maxIters rounds — " +
-          "adversarially deep edge peel; raise maxIters (a partial peel " +
-          "would overstate the truss)")
-    // at the fixpoint the support table was computed on exactly the
-    // surviving edge set, so the filter IS the truss with its
-    // within-truss supports. Eagerly checkpoint the result and free the
-    // loop pins (the GraphSearch discipline): library callers outside
-    // Bench would otherwise leak pinned block sets per call.
-    val result = sup.filter(col("support") >= k - 2)
-      .select(col("u"), col("v"), col("support"))
-      .localCheckpoint(true)
-    bridge.freeLocalCheckpoint(tris)
-    bridge.freeLocalCheckpoint(sup)
-    result
   }
 
   def bfsDistances(edges: DataFrame, seeds: DataFrame,
@@ -412,24 +412,24 @@ object Graphs {
     // pin the edge list, derive the adjacency lazily from the pin (the
     // labelPropagation rationale; a caller-side pinned edge frame makes
     // this a cheap re-pin of the final rows)
-    val e0 = edges.localCheckpoint(true)
-    val adj = e0.select(col("u").as("node"), col("v").as("nbr"))
-      .unionAll(e0.select(col("v").as("node"), col("u").as("nbr")))
-    var dist = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
-    var lastCkpt = dist
-    for (i <- 1 to maxHops) {
-      val ext = dist.join(adj, Seq("node"))
-        .select(col("nbr").as("node"), (col("dist") + 1L).as("dist"))
-      val next = dist.unionAll(ext)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      dist = if (i < maxHops && i % checkpointInterval == 0) {
-        val cut = next.localCheckpoint(true)
-        org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(lastCkpt)
-        lastCkpt = cut
-        cut
-      } else next
+    Pins.scope { p =>
+      val e0 = p.pin(edges, true)
+      val adj = e0.select(col("u").as("node"), col("v").as("nbr"))
+        .unionAll(e0.select(col("v").as("node"), col("u").as("nbr")))
+      var dist = p.pin(seeds.select(col("node")).distinct()
+        .withColumn("dist", lit(0L)), true)
+      for (i <- 1 to maxHops) {
+        val ext = dist.join(adj, Seq("node"))
+          .select(col("nbr").as("node"), (col("dist") + 1L).as("dist"))
+        val next = dist.unionAll(ext)
+          .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+        dist = if (i < maxHops && i % checkpointInterval == 0) {
+          val cut = p.pin(next, true)
+          p.release(dist) // the previous cut
+          cut
+        } else next
+      }
+      dist
     }
-    dist
   }
 }

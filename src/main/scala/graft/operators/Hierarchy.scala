@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Pins
 
 /** Hierarchy flattening: transitive closure of a parent-child edge set.
   *
@@ -71,21 +72,25 @@ object Hierarchy {
   }
 
   def closure(edges: DataFrame, childCol: String, parentCol: String,
-              maxDepth: Int = 64): DataFrame = {
+              maxDepth: Int = 64): DataFrame =
+    Pins.scope(closureIn(_, edges, childCol, parentCol, maxDepth))
+
+  private def closureIn(p: Pins, edges: DataFrame, childCol: String,
+                        parentCol: String, maxDepth: Int): DataFrame = {
     // localCheckpoint per round, NOT persist: the doubling recurrence
     // would otherwise embed every prior round's plan inside the next
     // (lineage doubles per round), and Catalyst re-analysis comes to
     // dominate wall-clock after a few rounds. Checkpointing keeps each
-    // round's plan flat; blocks are freed by the ContextCleaner.
-    val base = edges.select(col(childCol).cast("long").as("child"),
+    // round's plan flat; the loop frees each superseded round, and the
+    // scope frees the last one unless it is returned.
+    var paths = p.pin(edges.select(col(childCol).cast("long").as("child"),
       col(parentCol).cast("long").as("ancestor"))
       .filter(col("child") =!= col("ancestor"))
-      .withColumn("depth", lit(1)).localCheckpoint(true)
-    var paths = base
+      .withColumn("depth", lit(1)), true)
     // fixpoint = pair count AND total depth both stable (count alone
     // would miss a later-found SHORTER path to an existing pair on DAGs)
     var stats = {
-      val r = base.agg(count(lit(1)), sum(col("depth"))).head
+      val r = paths.agg(count(lit(1)), sum(col("depth"))).head
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
     def round(): (DataFrame, (Long, Long)) = {
@@ -94,10 +99,9 @@ object Hierarchy {
         .join(paths.select(col("child").as("__mid"), col("ancestor"),
           col("depth").as("__d2")), Seq("__mid"))
         .select(col("child"), col("ancestor"), (col("__d1") + col("__d2")).as("depth"))
-      val next = paths.unionByName(hops)
+      val next = p.pin(paths.unionByName(hops)
         .groupBy(col("child"), col("ancestor"))
-        .agg(min(col("depth")).as("depth"))
-        .localCheckpoint(true)
+        .agg(min(col("depth")).as("depth")), true)
       val r = next.agg(count(lit(1)), sum(col("depth"))).head
       (next, (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
     }
@@ -107,12 +111,12 @@ object Hierarchy {
       val (next, nextStats) = round()
       if (nextStats == stats) {
         // converged: the freshly-built round duplicates `paths` — free it
-        org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(next)
+        p.release(next)
         converged = true
       } else {
         // free the superseded round's checkpoint blocks eagerly (GC
         // would get there eventually; large closures shouldn't wait)
-        org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(paths)
+        p.release(paths)
         paths = next; stats = nextStats; reach *= 2
       }
     }
@@ -122,14 +126,12 @@ object Hierarchy {
       // a silently partial closure would ship wrong rollups (the same
       // failure class Clusters.propagate throws on)
       val (check, checkStats) = round()
-      org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(check)
-      if (checkStats != stats) {
-        org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(paths)
+      p.release(check)
+      if (checkStats != stats)
         throw new IllegalStateException(
           s"hierarchy closure did not converge within maxDepth=$maxDepth " +
             "(deeper tree or a cycle kept shortening paths) — raise " +
             "maxDepth, or break the cycle upstream")
-      }
     }
     paths
   }
@@ -147,15 +149,12 @@ object Hierarchy {
         // no checkpoint actions, nothing to free
         val cl = closureKnownDepth(edges, childCol, parentCol, d)
         subtreeAggOver(cl, nodes, idCol, valueCol, as)
-      case None =>
-        val cl = closure(edges, childCol, parentCol, maxDepth)
+      case None => Pins.scope { p =>
+        val cl = closureIn(p, edges, childCol, parentCol, maxDepth)
         val out = subtreeAggOver(cl, nodes, idCol, valueCol, as).persist()
-        out.count() // materialize BEFORE releasing the closure it reads
-        // cl is a localCheckpoint'ed frame: Dataset.unpersist would clear
-        // CacheManager entries only, leaking the checkpoint RDD blocks
-        // until driver GC — free them the way the closure loop itself does
-        org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(cl)
+        out.count() // materialize BEFORE the scope frees the closure it reads
         out
+      }
     }
   }
 

@@ -92,23 +92,22 @@ object PageRank {
       if (seeds.isEmpty) lit(scale)
       else when(col("__base") > 0L, lit(scale)).otherwise(lit(0L)))
       .select(col("node"), col("pr"))
-    var lastCkpt: DataFrame = null
-    for (i <- 1 to iters) {
-      val inflow = ew.join(pr.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"),
-          expr("(((pr * weight) div __ow) * 85) div 100").as("__c"))
-        .groupBy(col("node")).agg(sum(col("__c")).as("__in"))
-      val next = nodes.join(inflow, Seq("node"), "left")
-        .select(col("node"),
-          (col("__base") + coalesce(col("__in"), lit(0L))).as("pr"))
-      pr = if (i < iters && i % checkpointInterval == 0) {
-        val cut = next.localCheckpoint(true)
-        if (lastCkpt != null)
-          org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(lastCkpt)
-        lastCkpt = cut
-        cut
-      } else next
+    graft.Pins.scope { p =>
+      for (i <- 1 to iters) {
+        val inflow = ew.join(pr.withColumnRenamed("node", "src"), Seq("src"))
+          .select(col("dst").as("node"),
+            expr("(((pr * weight) div __ow) * 85) div 100").as("__c"))
+          .groupBy(col("node")).agg(sum(col("__c")).as("__in"))
+        val next = nodes.join(inflow, Seq("node"), "left")
+          .select(col("node"),
+            (col("__base") + coalesce(col("__in"), lit(0L))).as("pr"))
+        pr = if (i < iters && i % checkpointInterval == 0) {
+          val cut = p.pin(next, true)
+          p.release(pr) // the previous cut; none before the first
+          cut
+        } else next
+      }
+      pr
     }
-    pr
   }
 }

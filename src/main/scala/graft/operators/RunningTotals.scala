@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * "cumulative % of total" reports genuinely need a total order.
   *
   * Same two-pass machine as Mixture's per-group ranged cumsum
-  * (Mixture.withRunningBefore), degenerated to one global group:
+  * (Mixture.withRunningBeforeCols), degenerated to one global group:
   * range-repartition on the order columns (each partition holds a
   * contiguous slice of the total order), per-partition subtotals roll
   * into partition offsets through a window over the
@@ -62,7 +62,7 @@ object RunningTotals {
     * through one task: range-partition on (group, order) — a dominant
     * group spans many contiguous partitions — then per-(partition,
     * group) subtotals roll into offsets exactly as in the global form
-    * (the Mixture.withRunningBefore machine, inclusive variant, made
+    * (the Mixture.withRunningBeforeCols machine, inclusive variant, made
     * public). Use when group cardinality is LOW (a per-group window
     * would hot-partition) but the order is needed exactly.
     */
@@ -112,25 +112,25 @@ object RunningTotals {
                                 valueCol: String, outCol: String): DataFrame = {
     require(!df.columns.exists(c => c == "__pid" || c == "__off" || c == outCol),
       s"temp columns __pid/__off/$outCol collide with the input")
-    val sorted = df.repartitionByRange(orderBys: _*)
-      .sortWithinPartitions(orderBys: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
-    val statsW = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sorted.groupBy(col("__pid"))
-      .agg(max(col(valueCol)).as("__pmax"))
-      .withColumn("__off", max(col("__pmax")).over(statsW)) // null for pid 0
-      .drop("__pmax")
-    val localW = Window.partitionBy(col("__pid")).orderBy(orderBys: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // greatest() skips nulls and returns null only when BOTH sides are
-    // null — exactly the no-predecessor semantics wanted here
-    val out = sorted.join(broadcast(offsets), Seq("__pid"))
-      .withColumn(outCol, greatest(max(col(valueCol)).over(localW), col("__off")))
-      .drop("__pid", "__off")
-    try out.localCheckpoint(true)
-    finally org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(sorted)
+    graft.Pins.scope { p =>
+      val sorted = p.pin(df.repartitionByRange(orderBys: _*)
+        .sortWithinPartitions(orderBys: _*)
+        .withColumn("__pid", spark_partition_id()), true)
+      val statsW = Window.orderBy(col("__pid"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val offsets = sorted.groupBy(col("__pid"))
+        .agg(max(col(valueCol)).as("__pmax"))
+        .withColumn("__off", max(col("__pmax")).over(statsW)) // null for pid 0
+        .drop("__pmax")
+      val localW = Window.partitionBy(col("__pid")).orderBy(orderBys: _*)
+        .rowsBetween(Window.unboundedPreceding, -1)
+      // greatest() skips nulls and returns null only when BOTH sides are
+      // null — exactly the no-predecessor semantics wanted here
+      val out = sorted.join(broadcast(offsets), Seq("__pid"))
+        .withColumn(outCol, greatest(max(col(valueCol)).over(localW), col("__off")))
+        .drop("__pid", "__off")
+      out.localCheckpoint(true)
+    }
   }
 
   /** The shared ranged machine. `sums` = (valueCol → outCol) inclusive
@@ -163,42 +163,43 @@ object RunningTotals {
     val stamped0 = df.repartitionByRange(rangeCols: _*)
       .sortWithinPartitions(rangeCols: _*)
       .withColumn("__pid", spark_partition_id())
-    val sorted =
-      (if (needMid) stamped0.withColumn("__mid", monotonically_increasing_id())
-       else stamped0).localCheckpoint(true)
-    val statsW = (if (gcols.isEmpty) Window.partitionBy()
-                  else Window.partitionBy(gcols: _*))
-      .orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val aggExprs =
-      sums.map { case (v, o) => sum(col(v)).as(s"__ps_$o") } ++
-        (if (needMid) Seq(count(lit(1)).as("__ps__cnt"), min(col("__mid")).as("__m0"))
-         else Nil)
-    var offsets = sorted.groupBy(col("__pid") +: gcols: _*)
-      .agg(aggExprs.head, aggExprs.tail: _*)
-    for ((_, o) <- sums)
-      offsets = offsets
-        .withColumn(s"__off_$o", coalesce(sum(col(s"__ps_$o")).over(statsW), lit(0L)))
-        .drop(s"__ps_$o")
-    if (needMid)
-      offsets = offsets
-        .withColumn("__cntoff", coalesce(sum(col("__ps__cnt")).over(statsW), lit(0L)))
-        .drop("__ps__cnt")
-    var out = sorted.join(broadcast(offsets), "__pid" +: groupCols)
-    if (sums.nonEmpty) {
-      val localW = Window.partitionBy(col("__pid") +: gcols: _*)
-        .orderBy(orderBys: _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      for ((v, o) <- sums)
-        out = out.withColumn(o, col(s"__off_$o") + sum(col(v)).over(localW))
+    // pinOutput=false returns `out` lazy over `sorted`, so the scope hands
+    // that pin to the caller (the single-consumer rank-machine tail)
+    graft.Pins.scope { p =>
+      val sorted = p.pin(
+        if (needMid) stamped0.withColumn("__mid", monotonically_increasing_id())
+        else stamped0, true)
+      val statsW = (if (gcols.isEmpty) Window.partitionBy()
+                    else Window.partitionBy(gcols: _*))
+        .orderBy(col("__pid"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val aggExprs =
+        sums.map { case (v, o) => sum(col(v)).as(s"__ps_$o") } ++
+          (if (needMid) Seq(count(lit(1)).as("__ps__cnt"), min(col("__mid")).as("__m0"))
+           else Nil)
+      var offsets = sorted.groupBy(col("__pid") +: gcols: _*)
+        .agg(aggExprs.head, aggExprs.tail: _*)
+      for ((_, o) <- sums)
+        offsets = offsets
+          .withColumn(s"__off_$o", coalesce(sum(col(s"__ps_$o")).over(statsW), lit(0L)))
+          .drop(s"__ps_$o")
+      if (needMid)
+        offsets = offsets
+          .withColumn("__cntoff", coalesce(sum(col("__ps__cnt")).over(statsW), lit(0L)))
+          .drop("__ps__cnt")
+      var out = sorted.join(broadcast(offsets), "__pid" +: groupCols)
+      if (sums.nonEmpty) {
+        val localW = Window.partitionBy(col("__pid") +: gcols: _*)
+          .orderBy(orderBys: _*)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        for ((v, o) <- sums)
+          out = out.withColumn(o, col(s"__off_$o") + sum(col(v)).over(localW))
+      }
+      for (o <- ranks)
+        out = out.withColumn(o, col("__cntoff") + (col("__mid") - col("__m0")) + 1L)
+      out = out.drop(Seq("__pid", "__mid", "__m0", "__cntoff") ++
+        sums.map(s => s"__off_${s._2}"): _*)
+      if (pinOutput) out.localCheckpoint(true) else out
     }
-    for (o <- ranks)
-      out = out.withColumn(o, col("__cntoff") + (col("__mid") - col("__m0")) + 1L)
-    out = out.drop(Seq("__pid", "__mid", "__m0", "__cntoff") ++
-      sums.map(s => s"__off_${s._2}"): _*)
-    if (pinOutput)
-      try out.localCheckpoint(true)
-      finally org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(sorted)
-    else out // lazy over the `sorted` pin; ContextCleaner reclaims it
   }
 }

@@ -38,18 +38,18 @@ import org.apache.spark.sql.functions._
 object SurrogateKeys {
 
   def assign(df: DataFrame, orderBy: Seq[Column], idCol: String,
-             startAt: Long = 1L): DataFrame = {
-    val sorted = df.repartitionByRange(orderBy: _*).sortWithinPartitions(orderBy: _*)
+             startAt: Long = 1L): DataFrame = graft.Pins.scope { p =>
+    val sorted = p.pin(df.repartitionByRange(orderBy: _*).sortWithinPartitions(orderBy: _*)
       .withColumn("__pid", spark_partition_id())
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint(true) // eager + lineage-truncating: see DETERMINISM
-    try {
-      val stats = sorted.groupBy(col("__pid"))
-        .agg(count(lit(1)).as("cnt"), min(col("__mid")).as("base"))
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-        .sortBy(_._1)
-      if (stats.isEmpty) return df.withColumn(idCol, lit(startAt))
+      .withColumn("__mid", monotonically_increasing_id()),
+      true) // eager + lineage-truncating: see DETERMINISM
+    val stats = sorted.groupBy(col("__pid"))
+      .agg(count(lit(1)).as("cnt"), min(col("__mid")).as("base"))
+      .collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+      .sortBy(_._1)
+    if (stats.isEmpty) df.withColumn(idCol, lit(startAt))
+    else {
       val offsets = stats.scanLeft(0L)(_ + _._2).init
       // per-partition (offset, base) as a BROADCAST-joined side table: a
       // map LITERAL (element_at(typedlit(...), pid)) is a linear scan
@@ -65,9 +65,9 @@ object SurrogateKeys {
         .withColumn(idCol,
           lit(startAt) + col("__off") + (col("__mid") - col("__base")))
         .drop("__pid", "__mid", "__off", "__base")
-        // materialize from the pinned checkpoint BEFORE freeing it — a
-        // lazy result would have nothing to read once the blocks are gone
+        // materialize from the pinned checkpoint BEFORE the scope frees
+        // it — a lazy result would have nothing to read once it is gone
         .localCheckpoint(true)
-    } finally org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(sorted)
+    }
   }
 }

@@ -50,10 +50,10 @@ object Curriculum {
     // LAZY pin (r11 technique): the range exchange materializes inside
     // the total agg's own job instead of a dedicated checkpoint job —
     // one less scheduled action on a query that is job-count-floor
-    // bound; the free below still runs after every consumer action
-    val (sorted, withBefore) = Mixture.withRunningBeforeCols(
-      base, "__g", Seq("__h", idCol), "n_tokens", eagerPin = false)
-    try {
+    // bound; the scope frees it after every consumer action
+    graft.Pins.scope { p =>
+      val withBefore = Mixture.withRunningBeforeCols(
+        p, base, "__g", Seq("__h", idCol), "n_tokens", eagerPin = false)
       // the timeline's token total: every row's end offset is ≤ it, the
       // LAST row's equals it — one 1-row aggregate over the pinned pass
       val total = withBefore
@@ -66,6 +66,6 @@ object Curriculum {
         .select(col(idCol), col("n_tokens"), col("dsir_score"), col("phase"),
           col("__before").as("tok_offset"))
         .localCheckpoint(true)
-    } finally org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(sorted)
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.pipelines
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Pins
 
 /** Deterministic training-data mixture construction.
   *
@@ -250,41 +251,34 @@ object Mixture {
       .withColumn("seq_pos", (before % budget).cast("int"))
   }
 
-  /** The global per-group running sum BEFORE each row, computed without
-    * ever funneling a group through one task: range-repartition on
-    * (group, order) — a dominant group spans many contiguous
-    * partitions — then per-(partition, group) token sums roll into
-    * global offsets via a window over the PARTITION-COUNT-sized stats
-    * frame, and each row's result is its partition offset plus a
-    * partition-local running sum. The checkpoint pins the range
-    * exchange so both passes see identical partitioning (the
-    * SurrogateKeys determinism argument).
-    */
-  private[pipelines] def withRunningBefore(df: DataFrame, groupCol: String,
-                                orderCol: String,
-                                tokenCountCol: String): (DataFrame, DataFrame) =
-    withRunningBeforeCols(df, groupCol, Seq(orderCol), tokenCountCol)
-
-  /** Multi-column order variant (e.g. a hash order with an id
-    * tiebreak — a single 48-bit hash column collides at corpus scale).
-    */
-  /** `eagerPin = false` pins the range exchange LAZILY (the r11 cheap
+  /** The global per-group running sum BEFORE each row (`__before`),
+    * computed without ever funneling a group through one task:
+    * range-repartition on (group, order) — a dominant group spans many
+    * contiguous partitions — then per-(partition, group) token sums roll
+    * into global offsets via a window over the PARTITION-COUNT-sized
+    * stats frame, and each row's result is its partition offset plus a
+    * partition-local running sum. The pin (taken through `p`, so the
+    * caller's scope frees it) holds the range exchange so both passes
+    * see identical partitioning (the SurrogateKeys determinism
+    * argument). `orderCols` may be several columns (e.g. a hash order
+    * with an id tiebreak — a single 48-bit hash column collides at
+    * corpus scale).
+    *
+    * `eagerPin = false` pins the range exchange LAZILY (the r11 cheap
     * pin): the blocks still materialize exactly once — inside the first
     * consumer's action, typically the offsets broadcast — so both
     * passes still read the identical partitioning; it just saves the
-    * dedicated checkpoint job. Callers that FREE `sorted` must order
-    * the free after every consumer action (Curriculum does).
+    * dedicated checkpoint job. The caller's scope must outlast every
+    * consumer action (Curriculum's does).
     */
-  private[pipelines] def withRunningBeforeCols(df: DataFrame, groupCol: String,
-                                orderCols: Seq[String],
-                                tokenCountCol: String,
-                                eagerPin: Boolean = true): (DataFrame, DataFrame) = {
+  private[pipelines] def withRunningBeforeCols(p: Pins, df: DataFrame,
+      groupCol: String, orderCols: Seq[String], tokenCountCol: String,
+      eagerPin: Boolean = true): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     val ord = orderCols.map(col)
-    val sorted = df.repartitionByRange(col(groupCol) +: ord: _*)
+    val sorted = p.pin(df.repartitionByRange(col(groupCol) +: ord: _*)
       .sortWithinPartitions(col(groupCol) +: ord: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(eagerPin)
+      .withColumn("__pid", spark_partition_id()), eagerPin)
     val statsW = W.partitionBy(col(groupCol)).orderBy(col("__pid"))
       .rowsBetween(W.unboundedPreceding, -1)
     val offsets = sorted.groupBy(col("__pid"), col(groupCol))
@@ -293,10 +287,9 @@ object Mixture {
       .drop("__psum")
     val localW = W.partitionBy(col("__pid"), col(groupCol)).orderBy(ord: _*)
       .rowsBetween(W.unboundedPreceding, -1)
-    val withBefore = sorted.join(broadcast(offsets), Seq("__pid", groupCol))
+    sorted.join(broadcast(offsets), Seq("__pid", groupCol))
       .withColumn("__before",
         col("__off") + coalesce(sum(col(tokenCountCol)).over(localW), lit(0L)))
-    (sorted, withBefore)
   }
 
   /** [[capTokenBudget]] for hot-group corpora: identical kept set,
@@ -307,12 +300,12 @@ object Mixture {
   def capTokenBudgetRanged(df: DataFrame, groupCol: String, orderCol: String,
                            tokenCountCol: String, budget: Long): DataFrame = {
     require(budget > 0)
-    val (sorted, withBefore) = withRunningBefore(df, groupCol, orderCol, tokenCountCol)
-    try withBefore
-      .filter(col("__before") + col(tokenCountCol) <= budget)
-      .drop("__before", "__off", "__pid")
-      .localCheckpoint(true)
-    finally org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(sorted)
+    Pins.scope { p =>
+      withRunningBeforeCols(p, df, groupCol, Seq(orderCol), tokenCountCol)
+        .filter(col("__before") + col(tokenCountCol) <= budget)
+        .drop("__before", "__off", "__pid")
+        .localCheckpoint(true)
+    }
   }
 
   /** [[packSequences]] for hot-group corpora: identical (seq_id,
@@ -322,12 +315,12 @@ object Mixture {
   def packSequencesRanged(df: DataFrame, groupCol: String, orderCol: String,
                           tokenCountCol: String, budget: Int): DataFrame = {
     require(budget > 0)
-    val (sorted, withBefore) = withRunningBefore(df, groupCol, orderCol, tokenCountCol)
-    try withBefore
-      .withColumn("seq_id", floor(col("__before") / budget).cast("int"))
-      .withColumn("seq_pos", (col("__before") % budget).cast("int"))
-      .drop("__before", "__off", "__pid")
-      .localCheckpoint(true)
-    finally org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(sorted)
+    Pins.scope { p =>
+      withRunningBeforeCols(p, df, groupCol, Seq(orderCol), tokenCountCol)
+        .withColumn("seq_id", floor(col("__before") / budget).cast("int"))
+        .withColumn("seq_pos", (col("__before") % budget).cast("int"))
+        .drop("__before", "__off", "__pid")
+        .localCheckpoint(true)
+    }
   }
 }

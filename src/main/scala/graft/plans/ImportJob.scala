@@ -358,7 +358,6 @@ object ImportJob {
             graft.operators.Denormalize.resolveWithFallback(
               acc, lookup(l.dim), rungs, l.take)
           }
-        var gatePinned = false
         val in1 = spec.fkGate match {
           case None => spec.preResolve(laddered(in0), lookup)
           case Some(g) =>
@@ -373,8 +372,8 @@ object ImportJob {
                 quarantines(table) = quarantines.getOrElse(table, Nil) :+ bad
                 ok
               case FkFail =>
-                gatePinned = true
-                enforceFkFail(table, g, resolved)
+                // the merged output reads the pin; a failing gate frees it
+                graft.Pins.scope(enforceFkFail(_, table, g, resolved))
             }
         }
         val in2 = if (spec.dedupKeys.nonEmpty)
@@ -390,7 +389,7 @@ object ImportJob {
         // top of pinned blocks is cheaper than a second materialization
         // — measured on q_ecom_job_strict).
         val in = if ((spec.deleteExcess || spec.partialUpdate.isDefined ||
-            spec.flagMissing.isDefined) && !gatePinned)
+            spec.flagMissing.isDefined) && !spec.fkGate.exists(_.policy == FkFail))
           in2.localCheckpoint(false)
         else in2
         staged(table) = staged.getOrElse(table, Nil) :+ in
@@ -496,27 +495,28 @@ object ImportJob {
 
   /** The FkFail arm, shared with the streaming twin
     * ([[graft.streaming.StreamingImport.startWithFkGate]]): pin the
-    * resolved batch ONCE (the materialization serves both the gate scan
-    * and the downstream merge — the resolve ladder never executes
-    * twice), probe violations with a bounded limit-collect, and either
-    * throw [[FkViolationException]] with the LogFailedRows-style sample
-    * or return the pinned frame for the merge.
+    * resolved batch ONCE through `p` (the materialization serves both
+    * the gate scan and the downstream merge — the resolve ladder never
+    * executes twice), probe violations with a bounded limit-collect, and
+    * either throw [[FkViolationException]] with the LogFailedRows-style
+    * sample or return the pinned frame for the merge. The exception's
+    * `rows` frame reads the unpinned `resolved`, so the scope can free
+    * the pin on the throw and `rows` stays readable.
     */
-  private[graft] def enforceFkFail(table: String, g: FkGate,
+  private[graft] def enforceFkFail(p: graft.Pins, table: String, g: FkGate,
                                    resolved: DataFrame): DataFrame = {
-    val pinned = resolved.localCheckpoint(true)
-    val violating = pinned
-      .filter(g.columns.map(c => col(c).isNull).reduce(_ || _))
-    val sample = violating.limit(g.maxLogRows + 1).collect()
+    val pinned = p.pin(resolved, true)
+    val isViolation = g.columns.map(c => col(c).isNull).reduce(_ || _)
+    val sample = pinned.filter(isViolation).limit(g.maxLogRows + 1).collect()
     if (sample.nonEmpty) {
-      val cols = violating.columns
+      val cols = pinned.columns
       val rendered = sample.take(g.maxLogRows).map { r =>
         "Failed row: " + cols.zipWithIndex.map { case (c, i) =>
           s"""[$c: "${r.get(i)}"]"""
         }.mkString(", ")
       }.toSeq
       throw new FkViolationException(
-        table, g.columns, violating, rendered, sample.length)
+        table, g.columns, resolved.filter(isViolation), rendered, sample.length)
     }
     pinned
   }

@@ -27,8 +27,8 @@ import graft.functions.VectorFunctions
   * Scale shape per round: one beam⨝graph expansion (beam rows ≤
   * |queries|·(beamWidth·k_graph + beamWidth)), one id-keyed embedding
   * attach, one per-query top-B window — all bounded by the query set,
-  * never corpus-quadratic. Rounds are fixed; per-round lazy pins are
-  * freed as generations supersede (the kCore discipline).
+  * never corpus-quadratic. Rounds are fixed; the query-sized per-round
+  * lazy pins are freed together once the output is pinned.
   */
 object GraphSearch {
 
@@ -44,54 +44,46 @@ object GraphSearch {
              nEntry: Int = 4): DataFrame = {
     require(beamWidth >= 1 && rounds >= 1 && k >= 1 && nEntry >= 1)
     require(k <= beamWidth, "k must be <= beamWidth (the final beam is the pool)")
-    val free = org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint _
-    val g = graph.select(col("id").as("v"), col("neighbor_id").as("w"))
-      .unionByName(graph.select(col("neighbor_id").as("v"), col("id").as("w")))
-      .distinct().localCheckpoint(false)
-    val corpus = emb.filter(col("embedding").isNotNull)
-    val entry = corpus.select(col("vec_id").as("node"))
-      .orderBy(col("node") % 1048573L * 2654435761L % 1048576L, col("node"))
-      .limit(nEntry)
-    val q = queries.filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("query_id"), col("embedding").as("__qe"))
-      .localCheckpoint(false)
-    val embN = corpus.select(col("vec_id").as("node"), col("embedding").as("__ne"))
-    var beam = q.select(col("query_id")).crossJoin(broadcast(entry))
-    var lastScored: DataFrame = null
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("node"))
-    // per-round pins are QUERY-sized (≤ |queries|·beamWidth·(k_graph+1)
-    // rows), so they are all held to the end and freed after the eager
-    // output checkpoint — freeing a superseded lazy pin mid-loop loses
-    // blocks later rounds still read (measured:
+    // every pin below is held to scope exit, after the eager output
+    // checkpoint: the per-round pins are QUERY-sized (≤ |queries|·
+    // beamWidth·(k_graph+1) rows) and lazy, and freeing a superseded
+    // lazy pin mid-loop loses blocks later rounds still read (measured:
     // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND); there is no generation-sized
     // growth to bound here, unlike kCore's edge-list generations
-    val pins = scala.collection.mutable.Buffer[DataFrame](g, q)
-    for (_ <- 1 to rounds) {
-      val cand = beam.unionByName(
-          beam.join(g, beam("node") === g("v"))
-            .select(col("query_id"), col("w").as("node")))
-        .distinct()
-      val scored = cand.filter(col("node") =!= col("query_id"))
-        .join(embN, Seq("node"))
-        .join(q, Seq("query_id"))
-        .withColumn("cos_sim",
-          round(VectorFunctions.cosine(col("__qe"), col("__ne")), 4))
-        .select(col("query_id"), col("node"), col("cos_sim"))
-        .localCheckpoint(false)
-      val nextBeam = scored.withColumn("__rn", row_number().over(wq))
-        .filter(col("__rn") <= beamWidth)
-        .select(col("query_id"), col("node"))
-        .localCheckpoint(false)
-      pins += scored; pins += nextBeam
-      beam = nextBeam
-      lastScored = scored
+    graft.Pins.scope { p =>
+      val g = p.pin(graph.select(col("id").as("v"), col("neighbor_id").as("w"))
+        .unionByName(graph.select(col("neighbor_id").as("v"), col("id").as("w")))
+        .distinct(), false)
+      val corpus = emb.filter(col("embedding").isNotNull)
+      val entry = corpus.select(col("vec_id").as("node"))
+        .orderBy(col("node") % 1048573L * 2654435761L % 1048576L, col("node"))
+        .limit(nEntry)
+      val q = p.pin(queries.filter(col("embedding").isNotNull)
+        .select(col("vec_id").as("query_id"), col("embedding").as("__qe")), false)
+      val embN = corpus.select(col("vec_id").as("node"), col("embedding").as("__ne"))
+      var beam = q.select(col("query_id")).crossJoin(broadcast(entry))
+      var scored: DataFrame = null
+      val wq = Window.partitionBy(col("query_id"))
+        .orderBy(col("cos_sim").desc, col("node"))
+      for (_ <- 1 to rounds) {
+        val cand = beam.unionByName(
+            beam.join(g, beam("node") === g("v"))
+              .select(col("query_id"), col("w").as("node")))
+          .distinct()
+        scored = p.pin(cand.filter(col("node") =!= col("query_id"))
+          .join(embN, Seq("node"))
+          .join(q, Seq("query_id"))
+          .withColumn("cos_sim",
+            round(VectorFunctions.cosine(col("__qe"), col("__ne")), 4))
+          .select(col("query_id"), col("node"), col("cos_sim")), false)
+        beam = p.pin(scored.withColumn("__rn", row_number().over(wq))
+          .filter(col("__rn") <= beamWidth)
+          .select(col("query_id"), col("node")), false)
+      }
+      scored.withColumn("__rn", row_number().over(wq))
+        .filter(col("__rn") <= k)
+        .select(col("query_id"), col("node").as("neighbor_id"), col("cos_sim"))
+        .localCheckpoint(true)
     }
-    val out = lastScored.withColumn("__rn", row_number().over(wq))
-      .filter(col("__rn") <= k)
-      .select(col("query_id"), col("node").as("neighbor_id"), col("cos_sim"))
-      .localCheckpoint(true)
-    pins.foreach(free)
-    out
   }
 }

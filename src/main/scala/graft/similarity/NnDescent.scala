@@ -52,18 +52,17 @@ object NnDescent {
     require(k >= 1 && rounds >= 1)
     val base = emb.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("id"), col(vecCol).as("vec")).persist()
-    try {
+    try graft.Pins.scope { p =>
       val n = base.count()
       val ids = base.select(col("id"))
       // pseudo-random ring init; nonexistent targets drop via the join
-      var edges = base.select(col("id").as("v"),
+      var edges = p.pin(base.select(col("id").as("v"),
           explode(transform(sequence(lit(1), lit(k)),
             j => (col("id") * 1048573L + j.cast("long") * 40503L)
               % 999983L % lit(n))).as("w"))
         .filter(col("v") =!= col("w"))
         .join(ids.withColumnRenamed("id", "w"), Seq("w"))
-        .select(col("v"), col("w")).distinct()
-        .localCheckpoint(true)
+        .select(col("v"), col("w")).distinct(), true)
 
       val va = base.select(col("id").as("v"), col("vec").as("__va"))
       val vb = base.select(col("id").as("w"), col("vec").as("__vb"))
@@ -73,7 +72,7 @@ object NnDescent {
         val rev = edges.withColumn("__rn", row_number().over(revW))
           .filter(col("__rn") <= k)
           .select(col("w").as("v"), col("v").as("w"))
-        val b = edges.unionByName(rev).distinct().localCheckpoint(true)
+        val b = p.pin(edges.unionByName(rev).distinct(), true)
         val hop = b.select(col("v"), col("w").as("__u"))
           .join(b.select(col("v").as("__u"), col("w")), Seq("__u"))
           .select(col("v"), col("w"))
@@ -85,12 +84,11 @@ object NnDescent {
           .select(col("v"), col("w"), col("cos"))
         val topW = Window.partitionBy(col("v"))
           .orderBy(col("cos").desc, col("w"))
-        val next = sc.withColumn("__rn", row_number().over(topW))
+        val next = p.pin(sc.withColumn("__rn", row_number().over(topW))
           .filter(col("__rn") <= k)
-          .select(col("v"), col("w"), col("cos"))
-          .localCheckpoint(true)
-        org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(edges)
-        org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(b)
+          .select(col("v"), col("w"), col("cos")), true)
+        p.release(edges)
+        p.release(b)
         scored = next
         edges = next.select(col("v"), col("w"))
       }

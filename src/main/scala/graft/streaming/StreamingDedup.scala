@@ -61,12 +61,12 @@ class StreamingDedup(destPath: String, keys: Seq[String], order: Seq[Column],
     // materialize ONCE: the gate plan reads destPath lazily, and below we
     // both aggregate survivors (bloom) and append them to that same path —
     // pinning breaks the self-read-write and runs the gate a single time
-    val pinned = survivors.localCheckpoint(true)
-    try {
+    graft.Pins.scope { p =>
+      val pinned = p.pin(survivors, true)
       // bloom ⊇ dest invariant: merge the batch's keys BEFORE appending
       merge(Dedup.buildKeyBloom(pinned, keys, expectedItems, fpp))
       pinned.write.mode("append").parquet(destPath)
-    } finally org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(pinned)
+    }
   }
 
   private def serialized: Array[Byte] = {

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.Pins
 import graft.operators.{Drift, IncrementalAgg, Merge}
 
 /** Continuous staged import: the reference's temp-table → merge cycle
@@ -41,9 +42,10 @@ object StreamingImport {
     val merged = if (destExists)
       Merge.upsert(spark.read.parquet(destPath), batch, keys)
     else batch
-    // cut lineage before overwriting the directory being read
-    // (localCheckpoint materializes; cached-parquet re-read can't occur)
-    merged.localCheckpoint(true).write.mode("overwrite").parquet(destPath)
+    // cut lineage before overwriting the directory being read (the
+    // eager pin materializes; cached-parquet re-read can't occur), and
+    // free the destination-sized pin once it is written
+    Pins.scope(_.pin(merged, true).write.mode("overwrite").parquet(destPath))
   }
 
   /** Partition-scoped micro-batch merge: cost O(touched partitions), not
@@ -86,10 +88,10 @@ object StreamingImport {
         .filter(col(partCol).isin(touched: _*)) // prunes to touched dirs
       Merge.upsert(dest, batch, keys)
     } else batch
-    merged.localCheckpoint(true).write.mode("overwrite")
+    Pins.scope(_.pin(merged, true).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol)
-      .parquet(destPath)
+      .parquet(destPath))
   }
 
   /** Fail fast if the batch schema NARROWS the destination: the pruned
@@ -122,49 +124,48 @@ object StreamingImport {
     val spark = batch.sparkSession
     val destExists = pathExists(batch, destPath)
     val touched = batch.select(partCol).distinct().collect().map(_.get(0))
-    if (destExists && touched.nonEmpty) {
-      requireNoNarrowing(batch, destPath)
-      val destAll = spark.read.schema(batch.schema).parquet(destPath)
-      // partitions (outside the touched set) still holding a batch key:
-      // column-pruned scan — parquet reads only key + partition columns
-      val stale = destAll
-        .filter(!col(partCol).isin(touched: _*))
-        .join(batch.select(keys.map(col): _*).distinct(), keys, "left_semi")
-        .select(partCol).distinct().collect().map(_.get(0))
-      val readSet = touched ++ stale
-      val dest = destAll.filter(col(partCol).isin(readSet: _*))
-      // within the read set: batch rows win; a dest row whose key is in
-      // the batch but whose partition differs is the stale copy — drop it
-      val cleaned = dest.join(
-        batch.select((keys :+ partCol).map(col): _*).distinct()
-          .withColumnRenamed(partCol, "__new_part"),
-        keys, "left_outer")
-        .filter(col("__new_part").isNull || col("__new_part") === col(partCol))
-        .drop("__new_part")
-      val merged = Merge.upsert(cleaned, batch, keys).localCheckpoint(true)
-      // a stale partition whose every row moved away produces NO output
-      // rows, so dynamic overwrite would never replace it — drop the
-      // now-empty partition directories explicitly (merged is already
-      // materialized by the checkpoint, so the read is finished)
-      val kept = merged.select(partCol).distinct().collect().map(_.get(0)).toSet
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      stale.filterNot(kept).foreach { v =>
-        // Spark's own partition-path escaping (NOT URL encoding — a
-        // space stays a space in Hive layout, '+' would miss the dir)
-        val escaped = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .escapePathName(String.valueOf(v))
-        fs.delete(new org.apache.hadoop.fs.Path(destPath, s"$partCol=$escaped"), true)
-      }
+    Pins.scope { p =>
+      val merged = if (destExists && touched.nonEmpty) {
+        requireNoNarrowing(batch, destPath)
+        val destAll = spark.read.schema(batch.schema).parquet(destPath)
+        // partitions (outside the touched set) still holding a batch key:
+        // column-pruned scan — parquet reads only key + partition columns
+        val stale = destAll
+          .filter(!col(partCol).isin(touched: _*))
+          .join(batch.select(keys.map(col): _*).distinct(), keys, "left_semi")
+          .select(partCol).distinct().collect().map(_.get(0))
+        val readSet = touched ++ stale
+        val dest = destAll.filter(col(partCol).isin(readSet: _*))
+        // within the read set: batch rows win; a dest row whose key is in
+        // the batch but whose partition differs is the stale copy — drop it
+        val cleaned = dest.join(
+          batch.select((keys :+ partCol).map(col): _*).distinct()
+            .withColumnRenamed(partCol, "__new_part"),
+          keys, "left_outer")
+          .filter(col("__new_part").isNull || col("__new_part") === col(partCol))
+          .drop("__new_part")
+        val merged = p.pin(Merge.upsert(cleaned, batch, keys), true)
+        // a stale partition whose every row moved away produces NO output
+        // rows, so dynamic overwrite would never replace it — drop the
+        // now-empty partition directories explicitly (merged is already
+        // materialized by the checkpoint, so the read is finished)
+        val kept = merged.select(partCol).distinct().collect().map(_.get(0)).toSet
+        val fs = org.apache.hadoop.fs.FileSystem.get(
+          spark.sparkContext.hadoopConfiguration)
+        stale.filterNot(kept).foreach { v =>
+          // Spark's own partition-path escaping (NOT URL encoding — a
+          // space stays a space in Hive layout, '+' would miss the dir)
+          val escaped = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .escapePathName(String.valueOf(v))
+          fs.delete(new org.apache.hadoop.fs.Path(destPath, s"$partCol=$escaped"), true)
+        }
+        merged
+      } else p.pin(batch, true)
       merged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partCol)
         .parquet(destPath)
-    } else
-      batch.localCheckpoint(true).write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partCol)
-        .parquet(destPath)
+    }
   }
 
   def startPartitioned(stream: DataFrame, destPath: String, keys: Seq[String],
@@ -308,15 +309,18 @@ object StreamingImport {
         Seq("bucket"), lit(0), col("op"))
     else
       IncrementalAgg.init(feed.filter(col("op") === "I"), Seq("bucket"), lit(0))
-    val mat = state1.localCheckpoint(true)
-    // a first feed with no non-null values folds to ZERO rows: don't
-    // commit an empty initial version (readers would score an empty
-    // frame); the next batch re-inits identically — null values never
-    // count. An empty fold of a NON-empty state cannot occur (every
-    // retract pairs with an insert, so the total never shrinks to zero).
-    if (applied < 0 && mat.isEmpty) return
-    mat.write.mode("overwrite").parquet(s"${hook.countsPath}/v=$batchId")
-    dropCountVersions(spark, hook.countsPath, Seq(applied).filter(_ >= 0))
+    Pins.scope { p =>
+      val mat = p.pin(state1, true)
+      // a first feed with no non-null values folds to ZERO rows: don't
+      // commit an empty initial version (readers would score an empty
+      // frame); the next batch re-inits identically — null values never
+      // count. An empty fold of a NON-empty state cannot occur (every
+      // retract pairs with an insert, so the total never shrinks to zero).
+      if (applied >= 0 || !mat.isEmpty) {
+        mat.write.mode("overwrite").parquet(s"${hook.countsPath}/v=$batchId")
+        dropCountVersions(spark, hook.countsPath, Seq(applied).filter(_ >= 0))
+      }
+    }
   }
 
   /** [[start]] plus continuous distribution monitoring: after every
@@ -374,7 +378,8 @@ object StreamingImport {
     * ([[graft.plans.ImportJob.FkQuarantine]]) while resolved rows
     * upsert. The fail arm reuses [[graft.plans.ImportJob.enforceFkFail]]
     * — one pinned materialization per batch serves gate scan + upsert;
-    * the pinned blocks are freed after the batch commits.
+    * the batch's scope frees the pin after the upsert commits, or when
+    * the gate throws.
     */
   def startWithFkGate(stream: DataFrame, destPath: String, keys: Seq[String],
                       resolve: DataFrame => DataFrame,
@@ -396,11 +401,10 @@ object StreamingImport {
           case graft.plans.ImportJob.FkFail =>
             // the abort message's "Failed at importing <table>" slot
             // wants a logical name, not a filesystem path
-            val pinned = graft.plans.ImportJob.enforceFkFail(
-              new java.io.File(destPath).getName, gate, resolved)
-            try upsertBatch(pinned, destPath, keys)
-            finally org.apache.spark.sql.graftbridge.bridge
-              .freeLocalCheckpoint(pinned)
+            Pins.scope { p =>
+              upsertBatch(graft.plans.ImportJob.enforceFkFail(
+                p, new java.io.File(destPath).getName, gate, resolved), destPath, keys)
+            }
         }
         ()
       }

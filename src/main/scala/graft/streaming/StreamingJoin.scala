@@ -58,8 +58,8 @@ class StreamingJoin(statePath: String, joinKeys: Seq[String], aIdCol: String,
           .select(fresh.columns.map(col): _*)
           .unionByName(fresh)
       } else fresh
-    val pinned = out.localCheckpoint(true) // cut lineage: read+overwrite race
-    try {
+    graft.Pins.scope { p =>
+      val pinned = p.pin(out, true) // cut lineage: read+overwrite race
       pinned.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(BucketCol)
@@ -78,7 +78,7 @@ class StreamingJoin(statePath: String, joinKeys: Seq[String], aIdCol: String,
         emptied.foreach(b => fs.delete(
           new org.apache.hadoop.fs.Path(root, s"$BucketCol=$b"), true))
       }
-    } finally org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(pinned)
+    }
   }
 
   /** The maintained view, bucket column dropped. */

@@ -103,18 +103,15 @@ class StreamingSpanDedup(cleanedDir: String, registryDir: String,
           idCol, textCol, n, bloomBytes)
     // pin both: their lineage reads the registry files the writes below
     // mutate (the IncrementalNearDup recache hazard)
-    val cleanedPinned = cleaned.localCheckpoint(true)
-    val spansPinned = newSpans.localCheckpoint(true)
-    try {
+    graft.Pins.scope { p =>
+      val cleanedPinned = p.pin(cleaned, true)
+      val spansPinned = p.pin(newSpans, true)
       cleanedPinned.write.mode("overwrite")
         .parquet(s"$cleanedDir/batch=$batchId")
       // bloom ⊇ registry invariant: merge BEFORE the commit-marker write
       mergeSpans(spansPinned)
       spansPinned.write.mode("overwrite")
         .parquet(s"$registryDir/batch=$batchId")
-    } finally {
-      org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(cleanedPinned)
-      org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(spansPinned)
     }
   }
 

@@ -13,17 +13,6 @@ object bridge {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
   def toExpr(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Release the block-manager storage behind a `localCheckpoint(true)`
-    * frame. `Dataset.unpersist` only clears CacheManager entries, not
-    * checkpoint RDD blocks — iterative algorithms that checkpoint per
-    * round (lineage hygiene) must free superseded rounds explicitly or
-    * they accumulate until driver GC.
-    */
-  def freeLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
-
   /** Flush pending listener-bus events (test support: stage/job counting
     * listeners see all events from completed actions before asserting).
     * `listenerBus` is private[spark]; this shim lives in a spark

@@ -136,8 +136,12 @@ class GraphsSpec extends SparkSuite {
     val deepChain = (0L until 40L).flatMap(i =>
       Seq((3 * i, 3 * i + 1), (3 * i, 3 * i + 2), (3 * i + 1, 3 * i + 2),
         (3 * i + 1, 3 * i + 3), (3 * i + 2, 3 * i + 3)))
-    intercept[IllegalStateException](
-      Graphs.kTruss(edges(deepChain: _*), k = 4, maxIters = 2))
+    val deep = edges(deepChain: _*)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    intercept[IllegalStateException](Graphs.kTruss(deep, k = 4, maxIters = 2))
+    // the throw releases the loop's triangle list and support pins too
+    assert(sc.getPersistentRDDs.keySet -- before === Set.empty)
   }
 
   test("kCore peels a chain entirely at k=2 and throws when rounds are capped") {
@@ -145,9 +149,13 @@ class GraphsSpec extends SparkSuite {
     // per round -> needs 6 rounds; maxIters=3 must throw loudly
     val chain = (1L to 11L).map(i => (i, i + 1))
     assert(Graphs.kCore(edges(chain: _*), k = 2, maxIters = 20).count() === 0L)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
     val e = intercept[IllegalStateException](
       Graphs.kCore(edges(chain: _*), k = 2, maxIters = 3).count())
     assert(e.getMessage.contains("kCore"))
+    // the throw releases the last peel generation it had pinned
+    assert(sc.getPersistentRDDs.keySet -- before === Set.empty)
   }
 
   test("labelPropagation splits two cliques joined by a bridge; deterministic") {

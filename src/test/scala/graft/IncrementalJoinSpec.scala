@@ -121,9 +121,9 @@ class IncrementalJoinSpec extends SparkSuite {
   test("state branch is Exchange-free: dirty sets broadcast, state never shuffles") {
     val a = (1 to 500).map(i => (i.toLong, s"k${i % 50}", s"a$i")).toDF("aid", "k", "av")
     val b = (1 to 100).map(i => (i.toLong, s"k${i % 50}", s"b$i")).toDF("bid", "k", "bv")
-    val state = IncrementalJoin.joinOf(a, b, Seq("k"))
-      .localCheckpoint(true) // stand-in for the parquet-backed state scan
-    try {
+    Pins.scope { p =>
+      // stand-in for the parquet-backed state scan
+      val state = p.pin(IncrementalJoin.joinOf(a, b, Seq("k")), true)
       val delta = Seq((1L, "k1", "a1", "D")).toDF("aid", "k", "av", "op")
       val deltaB = Seq((2L, "k2", "b2", "D"), (2L, "k2", "b2x", "I"))
         .toDF("bid", "k", "bv", "op")
@@ -143,6 +143,6 @@ class IncrementalJoinSpec extends SparkSuite {
         .count(l => l.contains("Exchange") && !l.contains("BroadcastExchange"))
       assert(bhj >= 2, s"expected broadcast anti joins on the state branch:\n$plan")
       assert(stateShuffles === 0, s"state side must not shuffle:\n$plan")
-    } finally org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(state)
+    }
   }
 }

@@ -70,16 +70,20 @@ class MixtureSpec extends SparkSuite {
     val budget = 1000000L
     val capW = Mixture.capTokenBudget(d, "src", "id", "n", budget)
       .select("id").as[Long].collect().sorted.toSeq
-    val capR = Mixture.capTokenBudgetRanged(d, "src", "id", "n", budget)
-    assert(capR.select("id").as[Long].collect().sorted.toSeq === capW)
-    org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(capR)
+    Pins.scope { p =>
+      val capR = Mixture.capTokenBudgetRanged(d, "src", "id", "n", budget)
+      assert(capR.select("id").as[Long].collect().sorted.toSeq === capW)
+      p.release(capR)
+    }
     val packW = Mixture.packSequences(d, "src", "id", "n", budget = 4096)
       .select("id", "seq_id", "seq_pos").as[(Long, Int, Int)]
       .collect().sortBy(_._1).toSeq
-    val packR = Mixture.packSequencesRanged(d, "src", "id", "n", budget = 4096)
-    assert(packR.select("id", "seq_id", "seq_pos").as[(Long, Int, Int)]
-      .collect().sortBy(_._1).toSeq === packW)
-    org.apache.spark.sql.graftbridge.bridge.freeLocalCheckpoint(packR)
+    Pins.scope { p =>
+      val packR = Mixture.packSequencesRanged(d, "src", "id", "n", budget = 4096)
+      assert(packR.select("id", "seq_id", "seq_pos").as[(Long, Int, Int)]
+        .collect().sortBy(_._1).toSeq === packW)
+      p.release(packR)
+    }
   }
 
   test("rates above 1 replicate whole epochs plus a hash-sampled fraction") {

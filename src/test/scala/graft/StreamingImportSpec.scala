@@ -451,4 +451,19 @@ class StreamingImportSpec extends SparkSuite {
     val out = spark.read.parquet(dest).orderBy("id").as[KV].collect()
     assert(out === Array(KV(1, "y"), KV(5, "z")))
   }
+
+  test("upsertBatch frees its destination-sized pin after each write") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_simport_pins")
+    val dest = s"$dir/dest"
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    for (i <- 1 to 3) {
+      StreamingImport.upsertBatch(Seq(KV(i.toLong, s"v$i")).toDF(), dest, Seq("id"))
+      // checked right after each call: getPersistentRDDs holds its RDDs
+      // weakly, so a leaked pin nothing references drops out at the next GC
+      assert(sc.getPersistentRDDs.keySet -- before === Set.empty, s"after batch $i")
+    }
+    assert(spark.read.parquet(dest).count() === 3L)
+  }
 }
