@@ -35,9 +35,14 @@ import org.apache.spark.sql.functions._
   * aggregation whose double explode enumerates the pairs locally
   * (round 15 — the former sets⋈sets self-join re-shuffled the capped
   * corpus twice on `u` to probe a purely local enumeration), two
-  * item-count equi-joins (AQE picks broadcast when the item dimension
-  * fits), one per-item rank window for top-k (map-side
-  * WindowGroupLimit prunes before the shuffle).
+  * item-count equi-joins onto the (lo, hi) pair table (AQE picks
+  * broadcast when the item dimension fits) that score each pair ONCE,
+  * one explode that emits both directions, one per-item rank window
+  * for top-k (map-side WindowGroupLimit prunes before the shuffle).
+  * Maintenance folds a CDC delta with the DELTA as every pair-side
+  * join's build side, so a persisted pair table streams through
+  * broadcast joins into that one rank exchange instead of being
+  * shuffled and sorted on every batch.
   */
 object ItemSim {
 
@@ -98,18 +103,29 @@ object ItemSim {
     (pairCounts(capped), capped.groupBy(col("i")).agg(count(lit(1)).as("n_i")))
   }
 
-  /** Top-k cosine neighbors scored from persisted count tables. */
+  /** Top-k cosine neighbors scored from persisted count tables. Each
+    * (lo, hi) pair is scored ONCE: item sizes join onto the pair table
+    * (one join for `lo`, one for `hi`), `sim_q` is computed per pair, and
+    * one explode emits both directions just before the rank window. The
+    * score is direction-free — `n_lo·n_hi` commutes exactly in IEEE
+    * arithmetic — so both rows carry the bit-identical value a per-
+    * direction scoring would give. Mirroring the pairs before scoring
+    * would run the whole upstream plan (a maintained fold included)
+    * twice and join sizes onto twice the rows.
+    */
   def neighborsFromCounts(pairs: DataFrame, items: DataFrame, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    val sym = pairs.select(col("lo").as("item"), col("hi").as("neighbor"), col("n_both"))
-      .unionAll(pairs.select(col("hi").as("item"), col("lo").as("neighbor"), col("n_both")))
-    val scored = sym
-      .join(items.withColumnRenamed("i", "item").withColumnRenamed("n_i", "na"), "item")
-      .join(items.withColumnRenamed("i", "neighbor").withColumnRenamed("n_i", "nb"), "neighbor")
+    def dir(item: String, neighbor: String): Column = struct(col(item).as("item"),
+      col(neighbor).as("neighbor"), col("n_both"), col("sim_q"))
+    val scored = pairs
+      .join(items.select(col("i").as("lo"), col("n_i").as("n_lo")), "lo")
+      .join(items.select(col("i").as("hi"), col("n_i").as("n_hi")), "hi")
       .withColumn("sim_q",
         floor(col("n_both") * 10000.0 /
-          sqrt(col("na").cast("double") * col("nb").cast("double")) + 0.5)
+          sqrt(col("n_lo").cast("double") * col("n_hi").cast("double")) + 0.5)
           .cast("long"))
+      .select(explode(array(dir("lo", "hi"), dir("hi", "lo"))).as("__d"))
+      .select(col("__d.*"))
     val rankW = Window.partitionBy(col("item"))
       .orderBy(col("sim_q").desc, col("neighbor").asc)
     scored.withColumn("rank", row_number().over(rankW))
@@ -157,13 +173,15 @@ object ItemSim {
         .select(col(userCol), col(itemCol), col(strengthCol), lit(1L).as("__side")))
     val capW = Window.partitionBy(col("__side"), col(userCol))
       .orderBy(col(strengthCol).desc, col(itemCol).asc)
-    // null users dropped before the cap, as in cappedSets
+    // null users dropped before the cap, as in cappedSets. Not pinned:
+    // both deltas read it inside the consuming job, where AQE's exchange
+    // reuse runs the cap window's shuffle once; an eager pin would cost a
+    // job and leave blocks behind that the returned frames keep reading.
     val sets = tagged
       .filter(col(userCol).isNotNull)
       .withColumn("__r", row_number().over(capW))
       .filter(col("__r") <= maxUserItems)
       .select(col("__side"), col(userCol).as("u"), col(itemCol).as("i"))
-      .localCheckpoint(true)
     // pair deltas via the packed-array double explode (see pairCounts):
     // one (side, user) aggregation instead of a two-sided self-join
     // re-shuffle, each generated pair contributing its snapshot's ±1.
@@ -181,10 +199,24 @@ object ItemSim {
       .filter(col("__d") =!= 0L)
     val itemDelta = sets.groupBy(col("i")).agg(sum(col("__side")).as("__d"))
       .filter(col("__d") =!= 0L)
-    val newPairs = pairs.join(pairDelta, Seq("lo", "hi"), "full_outer")
-      .select(col("lo"), col("hi"),
-        (coalesce(col("n_both"), lit(0L)) + coalesce(col("__d"), lit(0L))).as("n_both"))
-      .filter(col("n_both") > 0)
+    // Pair fold with the delta on the build side of every join: updated
+    // rows are pairs ⟕ delta, inserted rows the delta pairs absent from
+    // (pairs ⋉ delta). A full outer join cannot broadcast either side,
+    // so it would shuffle and sort the whole pair table on every batch.
+    // No broadcast hint: Catalyst's size estimate already broadcasts a
+    // CDC-sized delta, and a batch too large for that falls back to a
+    // shuffle join instead of broadcasting an oversized table. The
+    // inserted side tests `n_both IS NULL` rather than anti-joining, so
+    // n_both survives column pruning in both reads of `pairs`: a lazy
+    // pair table (an aggregate) then plans alike in both and AQE reuses
+    // its exchange instead of running the pair explosion twice.
+    val key = Seq("lo", "hi")
+    val updated = pairs.join(pairDelta, key, "left_outer")
+      .select(col("lo"), col("hi"), (col("n_both") + coalesce(col("__d"), lit(0L))).as("n_both"))
+    val inserted = pairDelta.join(pairs.join(pairDelta, key, "left_semi"), key, "left_outer")
+      .filter(col("n_both").isNull)
+      .select(col("lo"), col("hi"), col("__d").as("n_both"))
+    val newPairs = updated.unionAll(inserted).filter(col("n_both") > 0)
     val newItems = items.join(itemDelta, Seq("i"), "full_outer")
       .select(col("i"),
         (coalesce(col("n_i"), lit(0L)) + coalesce(col("__d"), lit(0L))).as("n_i"))

@@ -110,6 +110,70 @@ class ItemSimSpec extends SparkSuite {
       sets(ItemSim.counts(df(newFull.filter(_._1.nonEmpty)), "u", "i", "s", 4)))
   }
 
+  test("maintainCounts pins nothing: no persistent RDD is left once its result is scored") {
+    val rnd = new scala.util.Random(29)
+    val base = (for (u <- 1L to 15L; i <- 1L to 12L if rnd.nextInt(3) == 0)
+      yield (u, i, 1L + rnd.nextInt(5))).toSeq
+    val newChanged = base.filter(_._1 == 4L) ++ Seq((4L, 50L, 9L), (5L, 1L, 2L))
+    val oldChanged = base.filter(r => r._1 == 4L || r._1 == 5L)
+    val (p0, i0) = ItemSim.counts(base.toDF("u", "i", "s"), "u", "i", "s", 4)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (pm, im) = ItemSim.maintainCounts(p0, i0,
+      oldChanged.toDF("u", "i", "s"), newChanged.toDF("u", "i", "s"), "u", "i", "s", 4)
+    val scored = ItemSim.neighborsFromCounts(pm, im, 3).count()
+    // checked right away, while pm/im are still referenced:
+    // getPersistentRDDs holds its RDDs weakly, so a later check could
+    // pass on leaking code once a GC drops the entry
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"maintainCounts left pins $leaked")
+    assert(scored > 0 && pm.count() > 0 && im.count() > 0)
+  }
+
+  test("maintained counts and top-k == rebuild across the delta shapes the fold must get " +
+    "right: insert, drive to 0, net no-op, top-k eviction, rank-k ties") {
+    def users(sets: (Long, Seq[Long])*) = sets.flatMap { case (u, is) => is.map(i => (u, i, 1L)) }
+    val unchanged = users(1L -> Seq(1L, 2L), 2L -> Seq(1L, 2L), 3L -> Seq(1L, 3L),
+      4L -> Seq(1L, 4L),
+      // item 20 (the HI side of its pairs): 11 leads, 12 and 13 tie at
+      // rank k = 2 and neighbor ASC keeps 12
+      9L -> Seq(11L, 20L), 10L -> Seq(12L, 20L), 11L -> Seq(13L, 20L), 12L -> Seq(11L, 20L))
+    // user 5 swaps 6 for 7: pair (5,6) drops to 0, (5,7) is new;
+    // users 6 and 7 trade pair (2,3): −1 and +1, no net change;
+    // new user 8 lifts (1,3) so item 1's top-2 goes from [2, 4] to
+    // [3, 2]: 4 is evicted, tied with 2 at rank k (item 1 is the LO side)
+    val oldChanged = users(5L -> Seq(5L, 6L), 6L -> Seq(2L, 3L), 7L -> Seq(3L))
+    val newChanged = users(5L -> Seq(5L, 7L), 6L -> Seq(2L), 7L -> Seq(2L, 3L),
+      8L -> Seq(1L, 3L))
+    def df(rows: Seq[(Long, Long, Long)]) = rows.toDF("u", "i", "s")
+    def pairMap(p: org.apache.spark.sql.DataFrame) =
+      p.as[(Long, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
+    def top(n: org.apache.spark.sql.DataFrame) =
+      n.as[(Long, Long, Long, Long, Int)].collect().toSet
+
+    val (p0, i0) = ItemSim.counts(df(unchanged ++ oldChanged), "u", "i", "s", 10)
+    val (pm, im) = ItemSim.maintainCounts(p0, i0, df(oldChanged), df(newChanged),
+      "u", "i", "s", 10)
+    val (pf, if0) = ItemSim.counts(df(unchanged ++ newChanged), "u", "i", "s", 10)
+    val (base, maintained) = (pairMap(p0), pairMap(pm))
+    assert(maintained === pairMap(pf))
+    assert(im.as[(Long, Long)].collect().toSet === if0.as[(Long, Long)].collect().toSet)
+    assert(base.get((5L, 6L)) === Some(1L) && !maintained.contains((5L, 6L)))
+    assert(!base.contains((5L, 7L)) && maintained.get((5L, 7L)) === Some(1L))
+    assert(base.get((2L, 3L)) === Some(1L) && maintained.get((2L, 3L)) === Some(1L))
+
+    val before = top(ItemSim.neighborsFromCounts(p0, i0, 2))
+    val after = top(ItemSim.neighborsFromCounts(pm, im, 2))
+    assert(after === top(ItemSim.neighbors(df(unchanged ++ newChanged), "u", "i", "s", 2, 10)))
+    def ranked(t: Set[(Long, Long, Long, Long, Int)], item: Long) =
+      t.filter(_._1 == item).toSeq.sortBy(_._5).map(r => (r._2, r._4))
+    assert(ranked(before, 1L) === Seq((2L, 5774L), (4L, 5000L)))
+    // 2/√20 and 1/√5 both quantize to 4472: the tie at rank 2 evicts 4
+    assert(ranked(after, 1L) === Seq((3L, 5164L), (2L, 4472L)))
+    assert(ranked(after, 20L) === Seq((11L, 7071L), (12L, 5000L)))
+    assert(after.exists(r => r._1 == 13L && r._2 == 20L && r._4 == 5000L))
+  }
+
   test("randomized equality with a driver-side reference") {
     val rnd = new scala.util.Random(3)
     val rows = (for (u <- 1L to 40L; i <- 1L to 25L if rnd.nextInt(4) == 0)

@@ -540,6 +540,66 @@ class PlansSpec extends SparkSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("item-neighbour upkeep: the pair table is read by no sort-merge join, shuffled only " +
+    "by the rank, and scored once below the explode that emits both directions") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
+    import graft.similarity.ItemSim
+    val rnd = new scala.util.Random(41)
+    val base = (for (u <- 1L to 30L; i <- 1L to 20L if rnd.nextInt(3) == 0)
+      yield (u, i, 1L + rnd.nextInt(5))).toSeq
+    val oldChanged = base.filter(_._1 <= 3L)
+    val newChanged = base.filter(r => r._1 <= 3L && r._2 != 5L) ++ Seq((2L, 40L, 9L), (31L, 7L, 1L))
+    val dir = java.nio.file.Files.createTempDirectory("itemsim-plan").toString
+    val (p0, i0) = ItemSim.counts(base.toDF("u", "i", "s"), "u", "i", "s", 6)
+    p0.write.parquet(s"$dir/pairs")
+    i0.write.parquet(s"$dir/items")
+    val (pm, im) = ItemSim.maintainCounts(spark.read.parquet(s"$dir/pairs"),
+      spark.read.parquet(s"$dir/items"), oldChanged.toDF("u", "i", "s"),
+      newChanged.toDF("u", "i", "s"), "u", "i", "s", 6)
+    val out = ItemSim.neighborsFromCounts(pm, im, 3)
+    assert(out.collect().nonEmpty)
+    val plan = out.queryExecution.executedPlan // the final adaptive plan
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case _ => p.children
+    }
+    def scanOf(table: String)(p: SparkPlan) = p match {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.getName == table)
+      case _ => false
+    }
+    def reads(p: SparkPlan, leaf: SparkPlan => Boolean): Boolean =
+      leaf(p) || kids(p).exists(reads(_, leaf))
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+    // every root-to-scan path of the pair table, root first
+    def paths(p: SparkPlan): Seq[List[SparkPlan]] =
+      if (scanOf("pairs")(p)) Seq(List(p)) else kids(p).flatMap(paths(_).map(p :: _))
+    val pairPaths = paths(plan)
+    assert(pairPaths.nonEmpty, plan)
+    // the CDC fold broadcasts the delta: no sort-merge join reads the pairs
+    assert(!nodes(plan).exists {
+      case j: SortMergeJoinExec => reads(j, scanOf("pairs"))
+      case _ => false
+    }, plan)
+    for (path <- pairPaths) {
+      assert(path.count(_.isInstanceOf[ShuffleExchangeExec]) === 1, plan) // the rank's
+      // the two item-size joins score the (lo, hi) pair once, below the
+      // single Generate that emits (item, neighbor) and (neighbor, item)
+      val gens = path.zipWithIndex.collect { case (_: GenerateExec, d) => d }
+      assert(gens.length === 1, plan)
+      val itemJoins = path.zip(path.tail).zipWithIndex.collect {
+        case ((j: BaseJoinExec, onPath), d)
+          if kids(j).exists(c => (c ne onPath) && reads(c, scanOf("items"))) => d
+      }
+      assert(itemJoins.length === 2 && itemJoins.forall(_ > gens.head), plan)
+    }
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("JobMetrics.observed collects counts during the action") {
     val df = Seq((Some(1L), "a"), (None, "b"), (Some(3L), "c")).toDF("id", "name")
     val (obsDf, obs) = JobMetrics.observed(df, "import_customer", Seq("id"))
