@@ -39,10 +39,8 @@ import org.apache.spark.sql.functions._
   * broadcast when the item dimension fits) that score each pair ONCE,
   * one explode that emits both directions, one per-item rank window
   * for top-k (map-side WindowGroupLimit prunes before the shuffle).
-  * Maintenance folds a CDC delta with the DELTA as every pair-side
-  * join's build side, so a persisted pair table streams through
-  * broadcast joins into that one rank exchange instead of being
-  * shuffled and sorted on every batch.
+  * Maintenance folds a CDC delta into the pair table with one full
+  * outer join; scoring its result runs that fold once.
   */
 object ItemSim {
 
@@ -199,24 +197,14 @@ object ItemSim {
       .filter(col("__d") =!= 0L)
     val itemDelta = sets.groupBy(col("i")).agg(sum(col("__side")).as("__d"))
       .filter(col("__d") =!= 0L)
-    // Pair fold with the delta on the build side of every join: updated
-    // rows are pairs ⟕ delta, inserted rows the delta pairs absent from
-    // (pairs ⋉ delta). A full outer join cannot broadcast either side,
-    // so it would shuffle and sort the whole pair table on every batch.
-    // No broadcast hint: Catalyst's size estimate already broadcasts a
-    // CDC-sized delta, and a batch too large for that falls back to a
-    // shuffle join instead of broadcasting an oversized table. The
-    // inserted side tests `n_both IS NULL` rather than anti-joining, so
-    // n_both survives column pruning in both reads of `pairs`: a lazy
-    // pair table (an aggregate) then plans alike in both and AQE reuses
-    // its exchange instead of running the pair explosion twice.
-    val key = Seq("lo", "hi")
-    val updated = pairs.join(pairDelta, key, "left_outer")
-      .select(col("lo"), col("hi"), (col("n_both") + coalesce(col("__d"), lit(0L))).as("n_both"))
-    val inserted = pairDelta.join(pairs.join(pairDelta, key, "left_semi"), key, "left_outer")
-      .filter(col("n_both").isNull)
-      .select(col("lo"), col("hi"), col("__d").as("n_both"))
-    val newPairs = updated.unionAll(inserted).filter(col("n_both") > 0)
+    // One full outer join folds the pair delta. A delta-side fold
+    // (pairs ⟕ delta, plus the delta rows absent from pairs ⋉ delta)
+    // reads `pairs` twice: over the lazy `counts` aggregate its joins
+    // plan as sort-merge joins that aggregate and sort the pairs twice.
+    val newPairs = pairs.join(pairDelta, Seq("lo", "hi"), "full_outer")
+      .select(col("lo"), col("hi"),
+        (coalesce(col("n_both"), lit(0L)) + coalesce(col("__d"), lit(0L))).as("n_both"))
+      .filter(col("n_both") > 0)
     val newItems = items.join(itemDelta, Seq("i"), "full_outer")
       .select(col("i"),
         (coalesce(col("n_i"), lit(0L)) + coalesce(col("__d"), lit(0L))).as("n_i"))

@@ -540,12 +540,29 @@ class PlansSpec extends SparkSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("item-neighbour upkeep: the pair table is read by no sort-merge join, shuffled only " +
-    "by the rank, and scored once below the explode that emits both directions") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+  // Plan walkers for the item-neighbour guards: `planKids` looks through
+  // adaptive wrappers and query stages; `ranKids` also stops at a reused
+  // exchange, so the nodes it reaches are the ones that actually run.
+  private def planKids(p: org.apache.spark.sql.execution.SparkPlan, throughReuse: Boolean = true)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
-    import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => if (throughReuse) Seq(r.child) else Nil
+      case _ => p.children
+    }
+  }
+  private def ranNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    p +: planKids(p, throughReuse = false).flatMap(ranNodes)
+
+  test("item-neighbour upkeep over a stored pair table: one fold join, and each pair " +
+    "scored once below the explode that emits both directions") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     import graft.similarity.ItemSim
     val rnd = new scala.util.Random(41)
     val base = (for (u <- 1L to 30L; i <- 1L to 20L if rnd.nextInt(3) == 0)
@@ -562,42 +579,82 @@ class PlansSpec extends SparkSuite {
     val out = ItemSim.neighborsFromCounts(pm, im, 3)
     assert(out.collect().nonEmpty)
     val plan = out.queryExecution.executedPlan // the final adaptive plan
-    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case _ => p.children
-    }
     def scanOf(table: String)(p: SparkPlan) = p match {
       case f: FileSourceScanExec => f.relation.location.rootPaths.exists(_.getName == table)
       case _ => false
     }
     def reads(p: SparkPlan, leaf: SparkPlan => Boolean): Boolean =
-      leaf(p) || kids(p).exists(reads(_, leaf))
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+      leaf(p) || planKids(p).exists(reads(_, leaf))
     // every root-to-scan path of the pair table, root first
     def paths(p: SparkPlan): Seq[List[SparkPlan]] =
-      if (scanOf("pairs")(p)) Seq(List(p)) else kids(p).flatMap(paths(_).map(p :: _))
+      if (scanOf("pairs")(p)) Seq(List(p)) else planKids(p).flatMap(paths(_).map(p :: _))
     val pairPaths = paths(plan)
     assert(pairPaths.nonEmpty, plan)
-    // the CDC fold broadcasts the delta: no sort-merge join reads the pairs
-    assert(!nodes(plan).exists {
-      case j: SortMergeJoinExec => reads(j, scanOf("pairs"))
-      case _ => false
-    }, plan)
     for (path <- pairPaths) {
-      assert(path.count(_.isInstanceOf[ShuffleExchangeExec]) === 1, plan) // the rank's
+      // the fold's join and the rank's exchange: nothing else re-shuffles the pairs
+      assert(path.count(_.isInstanceOf[ShuffleExchangeExec]) <= 2, plan)
       // the two item-size joins score the (lo, hi) pair once, below the
       // single Generate that emits (item, neighbor) and (neighbor, item)
       val gens = path.zipWithIndex.collect { case (_: GenerateExec, d) => d }
       assert(gens.length === 1, plan)
       val itemJoins = path.zip(path.tail).zipWithIndex.collect {
         case ((j: BaseJoinExec, onPath), d)
-          if kids(j).exists(c => (c ne onPath) && reads(c, scanOf("items"))) => d
+          if planKids(j).exists(c => (c ne onPath) && reads(c, scanOf("items"))) => d
       }
       assert(itemJoins.length === 2 && itemJoins.forall(_ > gens.head), plan)
     }
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("item-neighbour upkeep over the lazy counts aggregate: the pair aggregate, the " +
+    "fold join and the cap window each run once") {
+    // q_item_neighbors_maintained feeds `counts`' unpersisted aggregate
+    // straight into maintainCounts. Every operator over it must run
+    // once: a second read of `pairs` (a mirrored scoring, a fold with
+    // several pair-side joins) re-aggregates and re-sorts the whole
+    // pair table, and reused exchanges hide only the shuffle, not that.
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Final}
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.similarity.ItemSim
+    val rnd = new scala.util.Random(43)
+    val base = (for (u <- 1L to 30L; i <- 1L to 20L if rnd.nextInt(3) == 0)
+      yield (u, i, 1L + rnd.nextInt(5))).toSeq
+    val oldChanged = base.filter(_._1 <= 3L)
+    val newChanged = base.filter(r => r._1 <= 3L && r._2 != 5L) ++ Seq((2L, 40L, 9L), (31L, 7L, 1L))
+    val (p0, i0) = ItemSim.counts(base.toDF("u", "i", "s"), "u", "i", "s", 6)
+    val (pm, im) = ItemSim.maintainCounts(p0, i0, oldChanged.toDF("u", "i", "s"),
+      newChanged.toDF("u", "i", "s"), "u", "i", "s", 6)
+    val out = ItemSim.neighborsFromCounts(pm, im, 3)
+    assert(out.collect().nonEmpty)
+    val plan = out.queryExecution.executedPlan
+    val ran = ranNodes(plan)
+    def names(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      es.flatMap(_.references.map(_.name))
+    val pairAggs = ran.collect {
+      case a: HashAggregateExec if names(a.groupingExpressions) == Seq("lo", "hi") &&
+        a.aggregateExpressions.exists(e => e.mode == Final && e.aggregateFunction.isInstanceOf[Count]) => a
+    }
+    assert(pairAggs.length === 1, plan)
+    val folds = ran.collect { case j: BaseJoinExec if names(j.leftKeys) == Seq("lo", "hi") => j }
+    assert(folds.length === 1, plan)
+    def above(p: SparkPlan, target: SparkPlan): Boolean =
+      (p eq target) || planKids(p, throughReuse = false).exists(above(_, target))
+    assert(ran.count { case g: GenerateExec => above(g, folds.head); case _ => false } === 1,
+      plan)
+    // both change deltas read the unpinned cap window, whose shuffle
+    // runs once (the second read reuses it)
+    val capShuffles = ran.collect {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == ENSURE_REQUIREMENTS &&
+        (e.outputPartitioning match {
+          case h: HashPartitioning => names(h.expressions) == Seq("__side", "u")
+          case _ => false
+        }) => e
+    }
+    assert(capShuffles.length === 1, plan)
   }
 
   test("JobMetrics.observed collects counts during the action") {
